@@ -4,9 +4,9 @@ Reference analogue: the slave-side ``alreadySent`` ARC cache
 (/root/reference/src/Slave.py:112,118-142) is a lossy membership test
 that short-circuits most duplicate URLs before they reach the master's
 exact check (/root/reference/src/Master.py:284-314).  Here the same
-two-tier shape is: per-host-shard bloom filters (this module, built
-distributed + OR-merged on the driver, broadcast to executors, rebuilt
-*incrementally* per round per north_rule) followed by the exact
+two-tier shape is: per-host-shard bloom filters (this module, updated
+*incrementally* per round per north_rule inside one executor task per
+shard, broadcast to executors for the probe) followed by the exact
 anti-join in operators/dedup.py.
 
 Direction of the short-circuit: a bloom *negative* is definitely-new —
@@ -22,15 +22,14 @@ too big for one executor.  The scale path is implemented in
 by shard id and each task lazily loads ONLY the shard files present in
 its partition (typically one), so per-task memory is O(m/8) regardless
 of S.  Shards are persisted one file per shard with hard-link reuse for
-shards untouched in a round (save_dir), the same incremental-snapshot
-shape as the bucketed url_seen store.  The broadcast probe remains the
+shards untouched in a round (:func:`update_and_save_shards`), an
+incremental snapshot like the delta-log state tables.  The broadcast probe remains the
 default at sandbox scale (64 x 128 KB) where one task per shard would
 cost more in scheduling than it saves.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import shutil
@@ -85,65 +84,7 @@ class BloomShards:
         mask = (1 << (pos & 7)).astype(np.uint8)
         return ((byte & mask) == mask).all(axis=0)
 
-    def merge_partial(self, shard_id: int, partial: bytes) -> None:
-        self.bits[shard_id] |= np.frombuffer(partial, dtype=np.uint8)
-
-    # -- persistence (resume support) ----------------------------------------
-
-    def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            np.savez(f, bits=self.bits, m=self.m, k=self.k)
-        os.replace(tmp, path)
-
-    @classmethod
-    def load(cls, path: str) -> "BloomShards":
-        if os.path.isdir(path):
-            return cls.load_dir(path)
-        with open(path, "rb") as f:
-            z = np.load(io.BytesIO(f.read()))
-        obj = cls(z["bits"].shape[0], int(z["m"]), int(z["k"]))
-        obj.bits = z["bits"]
-        return obj
-
-    # -- per-shard directory format (scale path) ------------------------------
-
-    def save_dir(
-        self,
-        path: str,
-        prev_path: str | None = None,
-        dirty_shards: set[int] | None = None,
-    ) -> None:
-        """One file per shard; shards untouched this round are HARD-LINKED
-        from the previous version instead of rewritten (the incremental
-        rebuild the north_rule names; same shape as the bucketed url_seen
-        snapshots).  dirty_shards=None rewrites everything."""
-        tmp = path + ".tmp"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp)
-        with open(os.path.join(tmp, "meta.json"), "w") as f:
-            json.dump({"num_shards": self.num_shards, "m": self.m, "k": self.k}, f)
-        for s in range(self.num_shards):
-            dst = os.path.join(tmp, f"shard_{s:05d}.npy")
-            src = (
-                os.path.join(prev_path, f"shard_{s:05d}.npy") if prev_path else None
-            )
-            if (
-                dirty_shards is not None
-                and s not in dirty_shards
-                and src
-                and os.path.exists(src)
-            ):
-                os.link(src, dst)
-            else:
-                np.save(dst, self.bits[s])
-        # version dirs only become visible via the manifest commit, so a
-        # non-atomic swap here is safe (crashed leftovers are overwritten)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
+    # -- per-shard directory format ------------------------------------------
 
     @classmethod
     def load_dir(cls, path: str) -> "BloomShards":
@@ -163,39 +104,6 @@ class BloomShards:
         with open(os.path.join(path, "meta.json")) as f:
             return json.load(f)
 
-    # -- Spark integration ----------------------------------------------------
-
-    def update_from_df(
-        self, df: DataFrame, url_col: str = "url", host_col: str = "host"
-    ) -> set[int]:
-        """Incrementally add a round's new URLs, built distributed.
-
-        Each shard's partial bitset is built inside an ``applyInPandas``
-        task (vectorized hashing), and only S small bitsets are collected
-        and OR-merged — no raw URLs cross to the driver.  Returns the set
-        of shard ids that received updates (drives the incremental
-        save_dir hard-link reuse).
-        """
-        m = self.m
-        k = self.k
-        S = self.num_shards
-
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            shard = int(pdf["_shard"].iloc[0])
-            part = BloomShards(1, m, k)
-            part.add(0, pdf[url_col])
-            return pd.DataFrame({"shard": [shard], "bits": [part.bits[0].tobytes()]})
-
-        partials = (
-            df.select(url_col, host_partition_key(F.col(host_col), S).alias("_shard"))
-            .groupBy("_shard")
-            .applyInPandas(build, schema="shard int, bits binary")
-            .collect()
-        )
-        for row in partials:
-            self.merge_partial(row["shard"], row["bits"])
-        return {int(row["shard"]) for row in partials}
-
 
 def update_and_save_shards(
     df: DataFrame,
@@ -207,8 +115,8 @@ def update_and_save_shards(
     url_col: str = "url",
     host_col: str = "host",
 ) -> set[int]:
-    """Executor-side incremental bloom update — the at-scale replacement
-    for ``BloomShards.update_from_df`` + driver ``save_dir``.
+    """Executor-side incremental bloom update, the engine's only bloom
+    write path.
 
     Each ``applyInPandas`` task owns one shard: it loads that shard's
     PREVIOUS bitset file, ORs in its batch of URL hashes (vectorized),

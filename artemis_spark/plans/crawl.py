@@ -25,7 +25,8 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,7 +57,7 @@ from ..operators.robots import apply_robots_flags, sitemap_candidates
 from ..rounds import EPOCH_SQL, ROUND_SECONDS, round_ts
 from ..schemas import MAX_REFRESH_RATE, URL_SEEN_SCHEMA
 from ..sources.fetch import build_payload_cache, build_web, synthetic_fetch
-from ..sources.state import StateStore
+from ..sources.state import DeltaTable, StateStore, bucket_of
 from .. import schemas as S
 
 ROBOTS_BLOCKED_STATUS = 999  # crawl_log marker for robots-rejected URLs
@@ -98,17 +99,17 @@ class CrawlConfig:
     # only its shard file (no S*m/8 broadcast).  Default False: at sandbox
     # shard sizes the broadcast is cheaper; at 4096x3MB it is mandatory.
     bloom_shard_local: bool = False
-    # url_seen is stored partitioned by pmod(xxhash64(host), state_buckets);
-    # a round rewrites only buckets containing updates and hard-links the
-    # rest (Iceberg-manifest analogue) — O(dirty) not O(|state|) per round.
+    # Every per-host state table (url_seen, host_stats, robots_cache) is
+    # stored under pmod(xxhash64(host), state_buckets): compacted bases
+    # are partitioned by it, so wave-sliced reads prune whole buckets.
     # 256 by default (pinned in the manifest on first commit, so raising
     # it never mixes moduli within one state dir); at 10^10 URLs use 4096+.
     state_buckets: int = 256
-    # >0 enables the delta-log MERGE layout: each round appends only its
-    # update rows as a delta version (write cost O(|wave|) even when every
-    # bucket is dirty); reads reconstruct last-writer-wins per url, and
-    # the chain is compacted to a single base every N rounds to bound
-    # read amplification.  0 = always rewrite dirty buckets (r02 layout).
+    # Delta-log MERGE layout (sources/state.py DeltaTable): each round
+    # appends only its update rows as a delta version (write cost
+    # O(|wave|) even when every bucket is dirty); reads reconstruct per
+    # key, and a chain of N versions is compacted to one bucketed base
+    # to bound read amplification.  <= 1 compacts every round.
     state_delta_max_chain: int = 8
     decode_payloads: bool = True  # disable for pure scheduler benchmarks
     # T2/T3: extract outlinks from the fetched page BYTES (html/sitemap
@@ -118,22 +119,99 @@ class CrawlConfig:
     # salt>0 shapes the wave for a real per-host HTTP fetcher; the
     # synthetic join path leaves it 0 (the join partitions by url).
     fetch_salt: int = 0
-    cache_web: bool = True  # cache link_graph/payloads partitioned on join keys
     light_stats: bool = False  # skip info-only frontier-size count (bench mode)
-    # Truncate the lineage of each round's hot intermediates with
-    # localCheckpoint(eager=False) instead of cache().  A round's tree
-    # (chain reconstruction ∪ recrawl scan → dedupe → robots/auth →
-    # politeness → fetch join → markup extraction → MERGE) feeds ~30
-    # driver actions (writes, collects, counts); with cache() every one
-    # of them re-analyzes and re-optimizes the FULL tree and AQE replans
-    # it stage by stage — profiling showed the executors 98% idle
-    # (wall 429s vs 291s total task time on 32 cores) with the wall
-    # almost entirely single-threaded driver planning.  Pinning collapses
-    # each materialized intermediate to a leaf scan so downstream plans
-    # stay O(1)-sized however deep the round pipeline gets.  Losing RDD
-    # lineage is safe by design: the committed state store is the
-    # recovery mechanism (rounds are resumable), not Spark recompute.
-    plan_pin: bool = True
+
+
+def _is_sitemap():
+    return F.col("nature") == "web_static_sitemap"
+
+
+def _fmt_ok(allowed_fmts):
+    """F6 content-type gate (sitemaps carry no image payload).  NULL fmt
+    (a 200 row with no image payload at all, e.g. a .torrent file) must
+    gate as False, not NULL: the backoff rule's ~fmt_ok conjunct would
+    otherwise go NULL and skip the backoff bump."""
+    return _is_sitemap() | F.coalesce(F.col("fmt").isin(*allowed_fmts), F.lit(False))
+
+
+class _Gate(NamedTuple):
+    """What the gate stage hands the later stages: the three filter
+    scans of the ``gated`` pin, the wave's hosts and buckets, the robots
+    rules it refreshed / applied, and auth_sessions after this round's
+    logins."""
+
+    robots_blocked: DataFrame
+    auth_deferred: DataFrame
+    fetchable: DataFrame
+    cand_hosts: DataFrame
+    wave_buckets: list[int]
+    refreshed: DataFrame
+    wave_rules: DataFrame
+    sessions_next: DataFrame
+
+
+class _Round:
+    """One round's shared context: its number and logical clock, the
+    pinned bucket modulus, the three delta-log state tables, and every
+    pin made this round (released by :meth:`release`)."""
+
+    def __init__(self, store: StateStore, cfg: CrawlConfig):
+        self.t_start = time.monotonic()
+        self.r = store.last_round() + 1
+        self.now = round_ts(self.r)
+        # One bucket modulus for every host-keyed state table (url_seen,
+        # robots_cache, host_stats), pinned in the manifest on first
+        # commit — a resume with a different cfg.state_buckets would
+        # otherwise prune with the stored modulus while writing under the
+        # new one, duplicating keys across buckets.
+        stored_b = store.manifest().get("state_buckets")
+        self.n_buckets = n_buckets = int(stored_b) if stored_b else cfg.state_buckets
+        self.pins: list[DataFrame] = []
+
+        def table(name, schema, delta_parts=None):
+            return DeltaTable(
+                store, name, schema, n_buckets, cfg.state_delta_max_chain,
+                base_parts=max(1, min(cfg.num_partitions, n_buckets)),
+                delta_parts=delta_parts,
+            )
+
+        # delta files per round: url_seen keeps the seen_updates pin's
+        # own partitioning (no shuffle); host_stats deltas are
+        # O(|wave hosts|) rows and robots_cache deltas hold only the
+        # re-fetched rule sets, so fewer, larger files beat one per task
+        self.url_seen = table("url_seen", URL_SEEN_SCHEMA)
+        self.host_stats = table(
+            "host_stats", HOST_STATS_SCHEMA, max(1, cfg.num_partitions // 4)
+        )
+        self.robots_cache = table("robots_cache", S.ROBOTS_SCHEMA, 1)
+
+    def pin(self, df: DataFrame) -> DataFrame:
+        """Materialize-once node: truncate the lineage of a round's hot
+        intermediate with localCheckpoint(eager=False) instead of
+        cache().  A round's tree (chain reconstruction ∪ recrawl scan →
+        dedupe → robots/auth → politeness → fetch join → markup
+        extraction → MERGE) feeds ~30 driver actions (writes, collects,
+        counts); with cache() every one of them re-analyzes and
+        re-optimizes the FULL tree and AQE replans it stage by stage —
+        profiling showed the executors 98% idle (wall 429s vs 291s total
+        task time on 32 cores) with the wall almost entirely
+        single-threaded driver planning.  Pinning collapses each
+        materialized intermediate to a leaf scan so downstream plans
+        stay O(1)-sized however deep the round pipeline gets.  Losing
+        RDD lineage is safe by design: the committed state store is the
+        recovery mechanism (rounds are resumable), not Spark recompute."""
+        p = df.localCheckpoint(eager=False)
+        self.pins.append(p)
+        return p
+
+    def release(self, broadcasts: list) -> None:
+        """Unpersist every pin and destroy the round's bloom broadcasts:
+        every plan referencing them has materialized (or the round
+        failed), so otherwise each round leaks one bitset copy."""
+        while self.pins:
+            self.pins.pop().unpersist()
+        while broadcasts:
+            broadcasts.pop().destroy()
 
 
 class CrawlEngine:
@@ -159,19 +237,19 @@ class CrawlEngine:
         # would replicate each shared image ~10x into a multi-GB cache).
         # On a cluster the same effect comes from Iceberg bucketed tables.
         self.has_markup = "body" in self.link_graph.columns
-        use_markup = self.cfg.extract_markup and self.has_markup
+        self.use_markup = self.cfg.extract_markup and self.has_markup
         self.web = build_web(
             self.link_graph,
             self.cfg.num_partitions,
             # body and outlinks carry the same links twice; cache only the
             # one the configured extraction path (T2/T3) actually reads
-            include_outlinks=not use_markup,
-            include_body=use_markup,
+            include_outlinks=not self.use_markup,
+            include_body=self.use_markup,
         )
-        self.payload_cache = build_payload_cache(self.payloads, self.cfg.num_partitions)
-        if self.cfg.cache_web:
-            self.web = self.web.persist()
-            self.payload_cache = self.payload_cache.persist()
+        self.web = self.web.persist()
+        self.payload_cache = build_payload_cache(
+            self.payloads, self.cfg.num_partitions
+        ).persist()
         self.robots = spark.read.parquet(f"{web_dir}/robots_rules.parquet")
         self.domain_rules = spark.read.parquet(f"{web_dir}/domain_rules.parquet")
         # per-host accreditation rules (reference Task.py:12,41); absent
@@ -283,10 +361,7 @@ class CrawlEngine:
         if self._bloom is None:
             v = self.store.current_version("bloom")
             if v >= 0:
-                legacy = self._bloom_path(v) + ".npz"  # pre-r2 single-file format
-                self._bloom = BloomShards.load(
-                    legacy if os.path.exists(legacy) else self._bloom_path(v)
-                )
+                self._bloom = BloomShards.load_dir(self._bloom_path(v))
             else:
                 self._bloom = BloomShards(self.cfg.bloom_shards, self.cfg.bloom_bits_per_shard)
         return self._bloom
@@ -341,37 +416,55 @@ class CrawlEngine:
         )
 
     def run_round(self) -> dict:
-        cfg = self.cfg
-        r = self.store.last_round() + 1
-        now = round_ts(r)
-        t_start = time.monotonic()
-        shard = lambda c: host_partition_key(c, cfg.num_partitions)
-        # One bucket modulus for every host-keyed state table (url_seen,
-        # robots_cache, host_stats), pinned in the manifest on first
-        # commit — a resume with a different cfg.state_buckets would
-        # otherwise prune with the stored modulus while writing under the
-        # new one, duplicating keys across buckets.
-        stored_b = self.store.manifest().get("state_buckets")
-        n_buckets = int(stored_b) if stored_b else cfg.state_buckets
-        bucket_of = lambda c: F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
+        """One crawl round as a composition of stages: read state →
+        route + dedupe → gate (bloom, validate, robots, auth) → schedule
+        (politeness top-k) → fetch + extract → persist + commit.
+        Nothing the round writes is visible until the manifest commit;
+        every pin it made is released however it ends."""
+        rd = _Round(self.store, self.cfg)
+        r = rd.r
+        try:
+            url_seen, frontier, recrawl_due = self._read_state(rd)
+            candidates, n_in, is_empty = self._route(rd, frontier, recrawl_due)
+            if is_empty:
+                self._commit_empty(r)
+                return {"round": r, "scheduled": 0, "fetched": 0, "new_candidates": 0}
+            gate = self._gate(rd, candidates, url_seen)
+            scheduled, deferred = self._schedule(rd, gate)
+            fetched = self._fetch(rd, scheduled)
+            torrents = self._torrent_queue(fetched)
+            crawl_log = self._crawl_log(rd, fetched, gate, torrents)
+            extracted, next_frontier = self._links(rd, fetched, gate, scheduled, deferred)
+            seen_updates = self._seen_updates(rd, fetched, gate, torrents)
+            wall_ms, lineage, next_frontier = self._persist(
+                rd, candidates, gate, scheduled, fetched, crawl_log, extracted,
+                next_frontier, seen_updates,
+            )
+            totals = lineage.groupBy().agg(
+                F.sum("urls_scheduled").alias("s"),
+                F.sum("urls_fetched").alias("f"),
+                F.sum("urls_robots_blocked").alias("b"),
+            ).collect()[0]
+            n_next = None if self.cfg.light_stats else next_frontier.count()
+        finally:
+            rd.release(self._round_bcs)
+        # return contract: under cfg.light_stats the info-only counters
+        # "candidates"/"new_candidates" are None (not 0, not a sentinel
+        # int) — consumers aggregating per-round counts must skip None.
+        return {
+            "round": r,
+            "candidates": n_in,
+            "scheduled": int(totals["s"] or 0),
+            "robots_blocked": int(totals["b"] or 0),
+            "fetched": int(totals["f"] or 0),
+            "new_candidates": n_next,
+            "wall_ms": wall_ms,
+        }
 
-        def _pin(df: DataFrame) -> DataFrame:
-            """Materialize-once node: localCheckpoint truncates the plan
-            (downstream actions see a leaf scan, not the round's whole
-            tree — see cfg.plan_pin), cache() keeps full lineage."""
-            return df.localCheckpoint(eager=False) if cfg.plan_pin else df.cache()
+    # ----------------------------------------------------------- round stages
 
-        import os as _os
-        _timing = bool(int(_os.environ.get("ARTEMIS_ROUND_TIMING", "0")))
-        _phases: dict[str, float] = {}
-        _last = [t_start]
-
-        def _mark(name: str) -> None:
-            if _timing:
-                t = time.monotonic()
-                _phases[name] = round(t - _last[0], 2)
-                _last[0] = t
-
+    def _read_state(self, rd: _Round) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """(url_seen, frontier, recrawl_due) of the committed snapshot."""
         # A2 recrawl scheduler (/root/reference/src/Master.py:330-342),
         # merge-on-READ: stale URLs are derived from the committed
         # url_seen snapshot when the round starts instead of being
@@ -380,16 +473,22 @@ class CrawlEngine:
         # otherwise rewrite O(|state|) rows every round (the r02 bench's
         # largest single write).  The filter is identical to the old
         # round-end `_stale(merged_state, r+1)` evaluated one round later.
-        url_seen_pre = self.store.read("url_seen", URL_SEEN_SCHEMA)
-        if len(self.store.delta_chain("url_seen")) > 1:
+        url_seen = rd.url_seen.read()
+        if len(rd.url_seen.chain()) > 1:
             # delta-layout read is a reconstruction aggregate consumed by
-            # several jobs this round (recrawl scan, validate join, merge/
-            # compaction) — materialize it once instead of recomputing
-            url_seen_pre = _pin(url_seen_pre)
-        recrawl_due = self._stale(url_seen_pre, r, cfg.revisit_delay_rounds).select(
-            "url", "host", "depth", "nature", F.lit(r).alias("round_added")
+            # several jobs this round (recrawl scan, validate join) —
+            # materialize it once instead of recomputing
+            url_seen = rd.pin(url_seen)
+        recrawl_due = self._stale(url_seen, rd.r, self.cfg.revisit_delay_rounds).select(
+            "url", "host", "depth", "nature", F.lit(rd.r).alias("round_added")
         )
+        return url_seen, self.store.read("frontier", CANDIDATES_SCHEMA), recrawl_due
 
+    def _route(
+        self, rd: _Round, frontier: DataFrame, recrawl_due: DataFrame
+    ) -> tuple[DataFrame, int | None, bool]:
+        """(candidates pin, candidate count or None, round is empty)."""
+        cfg = self.cfg
         # F2 protocol rules + nature gating (tor/torrent unfetchable
         # in-sandbox) and F3 domain rules (broadcast blocklist anti-join)
         # apply BEFORE the routing exchange: the light_stats emptiness
@@ -400,21 +499,18 @@ class CrawlEngine:
         # shuffle every round just to prove the round is non-empty.
         blocked_hosts = self.domain_rules.filter(~F.col("allowed")).select("host")
 
-        def _gate(df):
+        def _admit(df):
             return df.filter(
                 scheme_of(F.col("url")).isin(*cfg.allowed_schemes)
                 & ~F.col("nature").isin("web_static_tor", "web_static_torrent")
             ).join(F.broadcast(blocked_hosts), "host", "left_anti")
 
-        frontier_raw = self.store.read("frontier", CANDIDATES_SCHEMA)
-        pre_shuffle = _gate(frontier_raw.unionByName(recrawl_due))
-        _mark('state_reads')
-
+        pre_shuffle = _admit(frontier.unionByName(recrawl_due))
         # THE routing shuffle (reference P2, /root/reference/src/Slave.py:145-172):
         # one hash exchange by host up front; every downstream join/window/
         # groupBy on the wave path keys by (host, ...) so Catalyst reuses
         # this partitioning and plans the rest of the round exchange-free.
-        candidates = _pin(dedupe_within_batch(
+        candidates = rd.pin(dedupe_within_batch(
             pre_shuffle.repartition(cfg.num_partitions, "host")
         ))
         if cfg.light_stats:
@@ -425,32 +521,25 @@ class CrawlEngine:
             # shuffle stage (O(|state|), growing every round) before the
             # limit even runs.  Only a drained frontier (end of crawl)
             # pays for the exact recrawl-inclusive probe.
-            n_in = None  # count skipped under light_stats (key kept, value None)
-            round_is_empty = _gate(frontier_raw).isEmpty() and pre_shuffle.isEmpty()
-        else:
-            n_in = candidates.count()
-            round_is_empty = n_in == 0
-        _mark('candidates_count')
-        if round_is_empty:
-            candidates.unpersist()
-            url_seen_pre.unpersist()  # cached when the delta chain is long
-            self._commit_empty(r, t_start)
-            return {"round": r, "scheduled": 0, "fetched": 0, "new_candidates": 0}
+            # (count skipped under light_stats: key kept, value None)
+            return candidates, None, _admit(frontier).isEmpty() and pre_shuffle.isEmpty()
+        n_in = candidates.count()
+        return candidates, n_in, n_in == 0
 
+    def _gate(self, rd: _Round, candidates: DataFrame, url_seen: DataFrame) -> _Gate:
+        """The gate chain — bloom probe → validate join → robots → auth
+        flags — materialized once as the ``gated`` pin; every branch of
+        it is a filter scan of that pin."""
+        cfg, r, now = self.cfg, rd.r, rd.now
         # F1 bloom pre-filter -> F4 exact validate
-        url_seen = url_seen_pre
         bloom_v = self.store.current_version("bloom")
-        if (
-            cfg.bloom_shard_local
-            and bloom_v >= 0
-            and os.path.isdir(self._bloom_path(bloom_v))
-        ):
+        if cfg.bloom_shard_local and bloom_v >= 0:
             probed = with_bloom_maybe_seen_shard_local(
                 candidates, self._bloom_path(bloom_v), cfg.num_partitions
             )
         else:
-            # broadcast probe (also round 0 / legacy-npz states, where no
-            # per-shard directory exists yet)
+            # broadcast probe (also round 0, where no per-shard
+            # directory exists yet)
             probed = with_bloom_maybe_seen(
                 self.spark, candidates, self.bloom, bc_registry=self._round_bcs
             )
@@ -458,80 +547,9 @@ class CrawlEngine:
         schedulable = as_new(definitely_new).unionByName(
             validate_against_seen(maybe_seen, url_seen, r, cfg.revisit_delay_rounds)
         )
-
-        # F5 robots with an honest TTL cache (/root/reference/src/Robot.py:91-98):
-        # per-host rules carry their REAL fetch time in the persisted
-        # robots_cache table.  Hosts needed this round whose entry is
-        # missing or TTL-expired are re-fetched (in-sandbox: re-read from
-        # the live robots source) and stamped fetched_at=now; live entries
-        # are served from cache even if the source changed — exactly the
-        # staleness window a real crawler has.  Rule-less hosts get a
-        # NULL-pattern sentinel row so they are not re-fetched every round
-        # (negative caching, ≙ RobotCache caching empty parsers).
-        #
-        # At-scale shape (VERDICT r03 #2/#3): the wave only consults rules
-        # for ITS OWN hosts, so everything here is wave-bounded —
-        #   cache_slice  stored rows for wave hosts, read under a
-        #                PartitionFilter on the STORED bucket column;
-        #   refreshed    re-fetched rules for the missing/expired subset
-        #                (the robots SOURCE is streamed with a broadcast
-        #                semi-join on that tiny host set; the full source
-        #                is NEVER broadcast — at 10^8 hosts that
-        #                broadcast cannot build);
-        #   wave_rules   live cache_slice ∪ refreshed — all that
-        #                apply_robots/sitemap discovery need.
-        robots_cache_raw = self.store.read("robots_cache", S.ROBOTS_SCHEMA)
-        rc_has_bucket = "bucket" in robots_cache_raw.columns
-        cand_hosts = _pin(candidates.select("host").distinct())
-        wave_buckets = sorted(
-            int(x["b"])
-            for x in cand_hosts.select(bucket_of(F.col("host")).alias("b"))
-            .distinct()
-            .collect()
+        cand_hosts, wave_buckets, refreshed, wave_rules = self._robots_rules(
+            rd, candidates
         )
-        cache_slice = _pin(
-            (
-                robots_cache_raw.filter(F.col("bucket").isin(wave_buckets))
-                if rc_has_bucket
-                else robots_cache_raw
-            )
-            .drop("bucket")
-            .join(F.broadcast(cand_hosts), "host", "left_semi")
-        )
-        live_slice = cache_slice.filter(
-            F.unix_timestamp(F.lit(now))
-            <= F.unix_timestamp("fetched_at") + F.col("ttl_s")
-        )
-        need = cand_hosts.join(
-            F.broadcast(live_slice.select("host").distinct()), "host", "left_anti"
-        )
-        # explicit casts: an all-NULL column in a user-supplied robots
-        # parquet arrives VOID-typed and corrupts downstream unions
-        src_rules = (
-            self.robots.drop("fetched_at")
-            .join(F.broadcast(need), "host", "left_semi")
-            .select(
-                "host",
-                F.col("pattern").cast("string").alias("pattern"),
-                F.col("allow").cast("boolean").alias("allow"),
-                F.col("sitemap_url").cast("string").alias("sitemap_url"),
-                F.lit(now).alias("fetched_at"),
-                F.coalesce(F.col("ttl_s").cast("int"), F.lit(3600)).alias("ttl_s"),
-            )
-        )
-        src_rules = _pin(src_rules)
-        no_rules = need.join(
-            F.broadcast(src_rules.select("host").distinct()), "host", "left_anti"
-        ).select(
-            "host",
-            F.lit(None).cast("string").alias("pattern"),
-            F.lit(None).cast("boolean").alias("allow"),
-            F.lit(None).cast("string").alias("sitemap_url"),
-            F.lit(now).alias("fetched_at"),
-            F.lit(3600).alias("ttl_s"),
-        )
-        refreshed = _pin(src_rules.unionByName(no_rules))
-        wave_rules = _pin(live_slice.unionByName(refreshed))
         # Auth annotation (accreditationRules, reference Task.py:12,41;
         # AuthNature Task.py:22-27): one broadcast join on the schedulable
         # set gives every downstream branch (allowed, robots-blocked,
@@ -573,7 +591,7 @@ class CrawlEngine:
             "host",
             "left",
         )
-        gated = _pin(live_flagged)
+        gated = rd.pin(live_flagged)
         robots_blocked = gated.filter(~F.col("robots_allowed")).drop(
             "robots_allowed", "_live"
         )
@@ -585,7 +603,91 @@ class CrawlEngine:
         fetchable = gated.filter(
             F.col("robots_allowed") & ((F.col("auth") == "no") | F.col("_live"))
         ).drop("robots_allowed", "_live")
+        return _Gate(
+            robots_blocked, auth_deferred, fetchable, cand_hosts, wave_buckets,
+            refreshed, wave_rules,
+            self._sessions_next(rd, auth_sessions, auth_deferred),
+        )
 
+    def _robots_rules(self, rd: _Round, candidates: DataFrame):
+        """(cand_hosts, wave_buckets, refreshed, wave_rules) of the wave.
+
+        F5 robots with an honest TTL cache (reference Robot.py:91-98):
+        per-host rules carry their REAL fetch time in the persisted
+        robots_cache table.  Hosts needed this round whose entry is
+        missing or TTL-expired are re-fetched (in-sandbox: re-read from
+        the live robots source) and stamped fetched_at=now; live entries
+        are served from cache even if the source changed — exactly the
+        staleness window a real crawler has.  Rule-less hosts get a
+        NULL-pattern sentinel row so they are not re-fetched every round
+        (negative caching, ≙ RobotCache caching empty parsers).
+
+        At-scale shape (VERDICT r03 #2/#3): the wave only consults rules
+        for ITS OWN hosts, so everything here is wave-bounded —
+          cache_slice  stored rows for wave hosts, read under a
+                       PartitionFilter on the STORED bucket column;
+          refreshed    re-fetched rules for the missing/expired subset
+                       (the robots SOURCE is streamed with a broadcast
+                       semi-join on that tiny host set; the full source
+                       is NEVER broadcast — at 10^8 hosts that
+                       broadcast cannot build);
+          wave_rules   live cache_slice ∪ refreshed — all that
+                       apply_robots/sitemap discovery need.
+        """
+        now = rd.now
+        cand_hosts = rd.pin(candidates.select("host").distinct())
+        wave_buckets = sorted(
+            int(x["b"])
+            for x in cand_hosts.select(bucket_of(F.col("host"), rd.n_buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+        cache_slice = rd.pin(
+            rd.robots_cache.read()
+            .filter(F.col("bucket").isin(wave_buckets))
+            .drop("bucket")
+            .join(F.broadcast(cand_hosts), "host", "left_semi")
+        )
+        live_slice = cache_slice.filter(
+            F.unix_timestamp(F.lit(now))
+            <= F.unix_timestamp("fetched_at") + F.col("ttl_s")
+        )
+        need = cand_hosts.join(
+            F.broadcast(live_slice.select("host").distinct()), "host", "left_anti"
+        )
+        # explicit casts: an all-NULL column in a user-supplied robots
+        # parquet arrives VOID-typed and corrupts downstream unions
+        src_rules = (
+            self.robots.drop("fetched_at")
+            .join(F.broadcast(need), "host", "left_semi")
+            .select(
+                "host",
+                F.col("pattern").cast("string").alias("pattern"),
+                F.col("allow").cast("boolean").alias("allow"),
+                F.col("sitemap_url").cast("string").alias("sitemap_url"),
+                F.lit(now).alias("fetched_at"),
+                F.coalesce(F.col("ttl_s").cast("int"), F.lit(3600)).alias("ttl_s"),
+            )
+        )
+        src_rules = rd.pin(src_rules)
+        no_rules = need.join(
+            F.broadcast(src_rules.select("host").distinct()), "host", "left_anti"
+        ).select(
+            "host",
+            F.lit(None).cast("string").alias("pattern"),
+            F.lit(None).cast("boolean").alias("allow"),
+            F.lit(None).cast("string").alias("sitemap_url"),
+            F.lit(now).alias("fetched_at"),
+            F.lit(3600).alias("ttl_s"),
+        )
+        refreshed = rd.pin(src_rules.unionByName(no_rules))
+        wave_rules = rd.pin(live_slice.unionByName(refreshed))
+        return cand_hosts, wave_buckets, refreshed, wave_rules
+
+    def _sessions_next(
+        self, rd: _Round, auth_sessions: DataFrame, auth_deferred: DataFrame
+    ) -> DataFrame:
+        """auth_sessions after this round's logins."""
         # Login round: every deferred host whose login is PERFORMABLE
         # (credentials + parsed fillable form for 'form' hosts — see
         # self.loginable) gets a session stamped this round.  The
@@ -608,43 +710,47 @@ class CrawlEngine:
                     F.concat_ws(
                         "|",
                         F.col("host"), F.col("login"), F.col("form_action"),
-                        F.col("user_field"), F.col("pass_field"), F.lit(str(r)),
+                        F.col("user_field"), F.col("pass_field"), F.lit(str(rd.r)),
                     ),
                     224,
                 ).alias("session_id"),
-                F.lit(now).alias("established_at"),
+                F.lit(rd.now).alias("established_at"),
                 F.col("lifetime_s").cast("int").alias("lifetime_s"),
             )
         )
-        sessions_next = auth_sessions.join(
+        return auth_sessions.join(
             new_sessions.select("host"), "host", "left_anti"
         ).unionByName(new_sessions)
 
-        # §2.6 priority + politeness top-k.  The score join consults only
-        # wave hosts: PartitionFilter on the stored bucket column (pushes
-        # through the delta-chain sum aggregate — the grouping includes
-        # bucket) + broadcast semi-join, so with_score broadcasts
-        # O(|wave hosts|) rows, never the full per-host history.
-        host_stats_raw = self.store.read("host_stats", HOST_STATS_SCHEMA)
-        hs_has_bucket = "bucket" in host_stats_raw.columns
+    def _schedule(self, rd: _Round, gate: _Gate) -> tuple[DataFrame, DataFrame]:
+        """(scheduled, deferred): §2.6 priority + politeness top-k."""
+        # The score join consults only wave hosts: PartitionFilter on the
+        # stored bucket column (pushes through the delta-chain sum
+        # aggregate — the grouping includes bucket) + broadcast
+        # semi-join, so with_score broadcasts O(|wave hosts|) rows, never
+        # the full per-host history.
         hs_slice = (
-            (
-                host_stats_raw.filter(F.col("bucket").isin(wave_buckets))
-                if hs_has_bucket
-                else host_stats_raw
-            )
+            rd.host_stats.read()
+            .filter(F.col("bucket").isin(gate.wave_buckets))
             .drop("bucket")
-            .join(F.broadcast(cand_hosts), "host", "left_semi")
+            .join(F.broadcast(gate.cand_hosts), "host", "left_semi")
         )
-        scored = with_score(fetchable, hs_slice)
+        scored = with_score(gate.fetchable, hs_slice)
         # one window evaluation (the gated pin preserves the routing
         # exchange's host partitioning through localCheckpoint, so the
         # window plans sort-only); scheduled and deferred are filter
         # scans of the ranked pin
-        ranked = _pin(politeness_ranked(scored))
-        scheduled = ranked.filter(F.col("_rk") <= cfg.politeness_budget).drop("_rk")
-        deferred = ranked.filter(F.col("_rk") > cfg.politeness_budget).drop("_rk")
+        ranked = rd.pin(politeness_ranked(scored))
+        budget = self.cfg.politeness_budget
+        return (
+            ranked.filter(F.col("_rk") <= budget).drop("_rk"),
+            ranked.filter(F.col("_rk") > budget).drop("_rk"),
+        )
 
+    def _fetch(self, rd: _Round, scheduled: DataFrame) -> DataFrame:
+        """The fetched pin: fetch join, content gates, torrent parse,
+        payload decode and markup extraction in one pass."""
+        cfg = self.cfg
         # S2/S3 fetch wave: co-partitioned join against the cached web.
         # (cfg.fetch_salt shapes a real-HTTP wave; the synthetic join path
         # keeps host partitioning so the join needs no exchange at all.)
@@ -663,15 +769,7 @@ class CrawlEngine:
             & (F.col("last_hash") != "")
             & (F.col("content_sha224") == F.col("last_hash"))
         )
-        # F6 content-type gate (sitemaps carry no image payload).  NULL
-        # fmt (a 200 row with no image payload at all, e.g. a .torrent
-        # file) must gate as False, not NULL: backoff_needed's ~fmt_ok
-        # conjunct would otherwise go NULL and skip the backoff bump.
-        is_sitemap = F.col("nature") == "web_static_sitemap"
-        fmt_ok = is_sitemap | F.coalesce(
-            F.col("fmt").isin(*cfg.allowed_fmts), F.lit(False)
-        )
-        saved = (F.col("status") == 200) & ~unchanged & fmt_ok
+        saved = (F.col("status") == 200) & ~unchanged & _fmt_ok(cfg.allowed_fmts)
 
         fetched = (
             fetched.withColumn("unchanged", unchanged)
@@ -709,14 +807,13 @@ class CrawlEngine:
             fetched = fetched.withColumn(
                 "decoded",
                 F.when(
-                    F.col("saved") & ~is_sitemap & F.col("bytes").isNotNull(),
+                    F.col("saved") & ~_is_sitemap() & F.col("bytes").isNotNull(),
                     decode_validate_image(F.col("bytes")),
                 ),
             ).withColumn("computed_phash", F.col("decoded.phash"))
         else:
             fetched = fetched.withColumn("computed_phash", F.lit(None).cast("long"))
-        use_markup = cfg.extract_markup and self.has_markup
-        if use_markup:
+        if self.use_markup:
             from ..functions.markup import extract_outlinks
 
             # T1 dispatch + T2/T3 extraction over the real page bytes
@@ -730,15 +827,17 @@ class CrawlEngine:
                     extract_outlinks(F.col("body"), F.col("nature")),
                 ),
             ).drop("outlinks")
-        fetched = _pin(fetched.drop("bytes", "body"))
+        return rd.pin(fetched.drop("bytes", "body"))
 
-        # S6 wave-level info-hash dedup: two .torrent URLs serving the
-        # SAME metainfo (identical bytes -> identical info-hash) must
-        # queue ONE magnet task; the winner is the deterministic
-        # min-(depth, host, auth, magnet) parent — struct min == the
-        # model's lexicographic tuple min.  Tiny per-wave set (torrent
-        # rows only), one hash aggregate.
-        torrent_queue = (
+    @staticmethod
+    def _torrent_queue(fetched: DataFrame) -> DataFrame:
+        """S6 wave-level info-hash dedup: two .torrent URLs serving the
+        SAME metainfo (identical bytes -> identical info-hash) must
+        queue ONE magnet task; the winner is the deterministic
+        min-(depth, host, auth, magnet) parent — struct min == the
+        model's lexicographic tuple min.  Tiny per-wave set (torrent
+        rows only), one hash aggregate."""
+        return (
             fetched.filter(F.col("magnet").isNotNull())
             .select(
                 F.regexp_extract("magnet", "btih:([0-9a-f]{40})", 1).alias("info_hash"),
@@ -754,7 +853,11 @@ class CrawlEngine:
             )
         )
 
-        # ----- crawl log (S8/S9 sink)
+    def _crawl_log(
+        self, rd: _Round, fetched: DataFrame, gate: _Gate, torrents: DataFrame
+    ) -> DataFrame:
+        """The round's crawl_log rows (S8/S9 sink)."""
+        r, now = rd.r, rd.now
         # payload validation (input_hint): decoded dims + phash must match
         # the fixture metadata; NULL when nothing was decoded this round
         payload_ok = F.when(
@@ -762,8 +865,24 @@ class CrawlEngine:
             (F.col("computed_phash") == F.col("expected_phash"))
             & (F.col("decoded.w") == F.col("expected_w").cast("int"))
             & (F.col("decoded.h") == F.col("expected_h").cast("int")),
-        ) if cfg.decode_payloads else F.lit(None).cast("boolean")
-        crawl_log = fetched.select(
+        ) if self.cfg.decode_payloads else F.lit(None).cast("boolean")
+
+        def marker_rows(df: DataFrame, status: int, url: str = "url") -> DataFrame:
+            """Unfetched rows logged under a status marker."""
+            return df.select(
+                F.lit(r).alias("round"),
+                F.col(url).alias("url"),
+                "host",
+                F.lit(status).alias("status"),
+                F.lit(None).cast("string").alias("image_id"),
+                F.lit(None).cast("long").alias("phash"),
+                F.lit(None).cast("string").alias("caption"),
+                F.lit(None).cast("boolean").alias("payload_ok"),
+                F.lit(now).alias("fetched_at"),
+                "auth",
+            )
+
+        return fetched.select(
             F.lit(r).alias("round"),
             "url",
             "host",
@@ -775,51 +894,27 @@ class CrawlEngine:
             F.lit(now).alias("fetched_at"),
             "auth",  # 'no' for plain rows; auth nature for session fetches
         ).unionByName(
-            robots_blocked.select(
-                F.lit(r).alias("round"),
-                "url",
-                "host",
-                F.lit(ROBOTS_BLOCKED_STATUS).alias("status"),
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("long").alias("phash"),
-                F.lit(None).cast("string").alias("caption"),
-                F.lit(None).cast("boolean").alias("payload_ok"),
-                F.lit(now).alias("fetched_at"),
-                "auth",
-            )
+            marker_rows(gate.robots_blocked, ROBOTS_BLOCKED_STATUS)
         ).unionByName(
-            auth_deferred.select(
-                F.lit(r).alias("round"),
-                "url",
-                "host",
-                F.lit(AUTH_DEFERRED_STATUS).alias("status"),
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("long").alias("phash"),
-                F.lit(None).cast("string").alias("caption"),
-                F.lit(None).cast("boolean").alias("payload_ok"),
-                F.lit(now).alias("fetched_at"),
-                "auth",
-            )
+            marker_rows(gate.auth_deferred, AUTH_DEFERRED_STATUS)
         ).unionByName(
             # queued magnet tasks (handler-queue marker): host/auth are
             # the winning parent's — the task is attributed to the page
             # that supplied the metainfo, like the reference's task
             # parentage (Task.buildFromFile inherits the parent task)
-            torrent_queue.select(
-                F.lit(r).alias("round"),
-                F.col("magnet").alias("url"),
-                "host",
-                F.lit(TORRENT_QUEUED_STATUS).alias("status"),
-                F.lit(None).cast("string").alias("image_id"),
-                F.lit(None).cast("long").alias("phash"),
-                F.lit(None).cast("string").alias("caption"),
-                F.lit(None).cast("boolean").alias("payload_ok"),
-                F.lit(now).alias("fetched_at"),
-                "auth",
-            )
+            marker_rows(torrents, TORRENT_QUEUED_STATUS, url="magnet")
         )
 
-        # ----- T2/T3 extraction -> next-round candidates
+    def _links(
+        self,
+        rd: _Round,
+        fetched: DataFrame,
+        gate: _Gate,
+        scheduled: DataFrame,
+        deferred: DataFrame,
+    ) -> tuple[DataFrame, DataFrame]:
+        """(extracted pin, next frontier): T2/T3 extraction, redirects,
+        sitemaps and never-seen deferred rows -> next-round candidates."""
         # parent depth is carried through the explode (join-free)
         redirects = (
             fetched.filter(F.col("status").isin(301, 302, 307, 308) & F.col("location").isNotNull())
@@ -834,7 +929,7 @@ class CrawlEngine:
         # hottest path of the round).  Materializing `_abs` as a column
         # keeps each regex evaluated once per row; CollapseProject leaves
         # multi-referenced non-trivial aliases alone.
-        if use_markup:
+        if self.use_markup:
             ex_exploded = fetched.filter(F.col("extractable")).select(
                 # resolve_base_href: a <base href> overrides the page URL
                 # as resolution parent (ExtractorFactory.py:84-86)
@@ -848,7 +943,7 @@ class CrawlEngine:
                 (F.col("depth") + 1).alias("depth"),
                 F.explode_outer("outlinks").alias("raw"),
             )
-        extracted_with_depth = _pin(
+        extracted_with_depth = rd.pin(
             ex_exploded
             .select("depth", resolve_url(F.col("parent"), F.col("raw")).alias("_abs"))
             .select("depth", canonicalize(F.col("_abs")).alias("url"))
@@ -858,7 +953,7 @@ class CrawlEngine:
 
         # sitemap discovery reads the robots CACHE (sitemaps are found when
         # robots is fetched/parsed, Robot.py:78-79,134-137)
-        sitemaps = sitemap_candidates(wave_rules, scheduled).select(
+        sitemaps = sitemap_candidates(gate.wave_rules, scheduled).select(
             "url", host_of(F.col("url")).alias("host"), F.lit(0).alias("depth")
         )
         redirect_cands = redirects.withColumn("host", host_of(F.col("url")))
@@ -868,7 +963,7 @@ class CrawlEngine:
             .unionByName(redirect_cands.select("url", "host", "depth"))
             .unionByName(sitemaps.select("url", "host", "depth"))
             .withColumn("nature", classify_nature(F.col("url")))
-            .withColumn("round_added", F.lit(r + 1))
+            .withColumn("round_added", F.lit(rd.r + 1))
             .select(*CANDIDATE_COLS)
             # politeness-deferred rows carry over ONLY when never-seen:
             # a was_seen deferred row sits in url_seen, stays due (its
@@ -881,13 +976,19 @@ class CrawlEngine:
                 deferred.filter(~F.col("was_seen")).select(*CANDIDATE_COLS)
             )
         )
+        return extracted_with_depth, next_frontier
 
-        # ----- state updates (A1 MERGE upsert)
+    def _seen_updates(
+        self, rd: _Round, fetched: DataFrame, gate: _Gate, torrents: DataFrame
+    ) -> DataFrame:
+        """The round's url_seen rows (A1 MERGE upsert), pinned: consumed
+        by the url_seen write and the bloom update."""
+        now = rd.now
         backoff_needed = (
             F.col("status").isin(301, 302, 304, 307, 308)
             | (F.col("status") >= 400)
             | F.col("unchanged")
-            | ((F.col("status") == 200) & ~F.col("unchanged") & ~fmt_ok)
+            | ((F.col("status") == 200) & ~F.col("unchanged") & ~_fmt_ok(self.cfg.allowed_fmts))
         )
         seen_updates = fetched.select(
             "url",
@@ -922,9 +1023,9 @@ class CrawlEngine:
             # consumption the r02 verdict asked for).  Credential-less
             # hosts AND hosts whose login form cannot be filled back off
             # to MAX like robots blocks.
-            robots_blocked.withColumn("_rr", F.lit(MAX_REFRESH_RATE))
+            gate.robots_blocked.withColumn("_rr", F.lit(MAX_REFRESH_RATE))
             .unionByName(
-                auth_deferred.join(
+                gate.auth_deferred.join(
                     F.broadcast(
                         self.loginable.select("host").withColumn("_hc", F.lit(True))
                     ),
@@ -957,7 +1058,7 @@ class CrawlEngine:
             # parent's (magnet URIs have no authority); refresh_rate=MAX —
             # no transmission daemon in-sandbox ever completes them (S6
             # stub), and the F2 nature gate keeps them unfetchable.
-            torrent_queue.select(
+            torrents.select(
                 F.col("magnet").alias("url"),
                 "host",
                 F.lit("magnet").alias("scheme"),
@@ -968,248 +1069,176 @@ class CrawlEngine:
                 F.lit("").alias("last_hash"),
                 F.lit(MAX_REFRESH_RATE).alias("refresh_rate"),
                 F.lit("web_static_torrent").alias("nature"),
-                F.lit(r + 1).alias("round_added"),
+                F.lit(rd.r + 1).alias("round_added"),
             )
         )
-        seen_updates = _pin(seen_updates)  # consumed by merge_upsert, recrawl merged_state and bloom
+        return rd.pin(seen_updates)
 
+    def _persist(
+        self,
+        rd: _Round,
+        candidates: DataFrame,
+        gate: _Gate,
+        scheduled: DataFrame,
+        fetched: DataFrame,
+        crawl_log: DataFrame,
+        extracted: DataFrame,
+        next_frontier: DataFrame,
+        seen_updates: DataFrame,
+    ) -> tuple[int, DataFrame, DataFrame]:
+        """Write every table of the round and commit the manifest;
+        returns (wall_ms, lineage pin, next_frontier pin)."""
+        store, r = self.store, rd.r
         # host PageRank proxy: inbound links observed this round.  In the
         # delta-log layout (A3 at scale) these per-host increments are the
-        # ONLY rows written for host_stats on a normal round; the full
-        # cumulative view exists lazily as the chain-sum reconstruction
-        # and is materialized only on compaction rounds (merged_stats).
-        inlink_delta = extracted_with_depth.groupBy("host").agg(
+        # ONLY rows written for host_stats on a normal round; the
+        # cumulative view is the chain-sum reconstruction.
+        inlink_delta = extracted.groupBy("host").agg(
             F.count("*").cast("long").alias("inlinks")
-        )
-        merged_stats = (
-            host_stats_raw.drop("bucket")
-            .withColumnRenamed("inlinks", "_old")
-            .join(inlink_delta.withColumnRenamed("inlinks", "_new"), "host", "full")
-            .select(
-                "host",
-                (
-                    F.coalesce(F.col("_old"), F.lit(0))
-                    + F.coalesce(F.col("_new"), F.lit(0))
-                ).cast("long").alias("inlinks"),
-            )
-        )
-
-        seen_cols = [f.name for f in URL_SEEN_SCHEMA.fields]
-        # ----- MERGE layout decisions.
-        # A legacy (pre-bucketing) url_seen version has flat files and no
-        # bucket partition column; nothing could be hard-linked from it, so
-        # the whole state must be treated as dirty for one migration round.
-        legacy_layout = "bucket" not in url_seen.columns
-        cur_seen = (
-            url_seen
-            if not legacy_layout  # stored partition col -> pruning
-            else url_seen.withColumn("bucket", bucket_of(F.col("host")))
-        )
-        # Delta-log MERGE (Iceberg merge-on-read analogue): a normal round
-        # appends ONLY this round's update rows as a new delta version —
-        # per-round write cost tracks |updates|, not |dirty buckets| —
-        # and the read side reconstructs last-writer-wins per url
-        # (state.py _read_chain).  Every state_delta_max_chain rounds the
-        # chain is compacted back to a single bucketed base so read
-        # amplification stays bounded.  Broad waves that dirty every
-        # bucket (the r02 scale-killer: bucketed MERGE degraded to a full
-        # rewrite) now cost O(|wave|) on all but the compaction round.
-        chain = self.store.delta_chain("url_seen")
-        base_v = self.store.current_version("url_seen")
-        cur_chain = chain if chain else ([base_v] if base_v >= 0 else [])
-        delta_on = cfg.state_delta_max_chain > 0 and not legacy_layout
-        full_rewrite = legacy_layout or (
-            delta_on and len(cur_chain) >= cfg.state_delta_max_chain
-        )
-        will_delta = delta_on and not full_rewrite and len(cur_chain) >= 1
-
-        upd = seen_updates.withColumn("bucket", bucket_of(F.col("host")))
-        def _timed(fn):
-            if not _timing:
-                return fn
-
-            def wrap():
-                t0 = time.monotonic()
-                try:
-                    return fn()
-                finally:
-                    _phases[f"w_{fn.__name__}"] = round(time.monotonic() - t0, 2)
-
-            wrap.__name__ = fn.__name__
-            return wrap
-
-        # ----- robots_cache persist (early).
-        # Delta-log bookkeeping mirroring url_seen's (A1): a normal round
-        # APPENDS only this round's re-fetched rule sets — write cost
-        # O(|refreshed hosts|), one small job — and the read side keeps a
-        # host's NEWEST rule set (state.py group_last); the chain
-        # compacts to one bucketed base every state_delta_max_chain
-        # rounds.  This replaced the per-round read-dirty-buckets +
-        # anti-join + rewrite job, the largest fixed item of the r4
-        # serial write tail (w__robots_cache 8-57 s at local[1]).
-        rc_chain = self.store.delta_chain("robots_cache")
-        rc_base_v = self.store.current_version("robots_cache")
-        rc_cur_chain = rc_chain if rc_chain else ([rc_base_v] if rc_base_v >= 0 else [])
-        rc_delta_on = cfg.state_delta_max_chain > 0 and rc_has_bucket
-        rc_will_delta = (
-            rc_delta_on
-            and len(rc_cur_chain) >= 1
-            and len(rc_cur_chain) < cfg.state_delta_max_chain
         )
 
         def _robots_cache():
-            """Returns (version, chain) for the manifest commit."""
-            if rc_has_bucket and refreshed.isEmpty():
-                # nothing refreshed this round: the committed version is
-                # already current — no write job at all
-                return rc_base_v, rc_cur_chain
-            if rc_will_delta:
-                # unpartitioned + coalesce(1): a delta holds only this
-                # round's re-fetched rule sets (tiny), so one file beats
-                # ~|buckets| one-row dir files; the bucket-pruned
-                # PartitionFilter path stays on the BASE member, which is
-                # the only O(|hosts|)-sized thing the wave slice reads
-                delta = refreshed.withColumn("bucket", bucket_of(F.col("host")))
-                v = self.store.write_version_delta(
-                    "robots_cache", delta.coalesce(1), partitioned=False
-                )
-                return v, rc_cur_chain + [v]
-            if rc_delta_on or not rc_has_bucket:
-                # compaction round / legacy flat-layout migration: one
-                # full bucketed rewrite of the merged view
-                # (robots_cache_raw IS the chain reconstruction when a
-                # chain exists)
-                full = (
-                    robots_cache_raw.drop("bucket")
-                    .join(
-                        F.broadcast(refreshed.select("host").distinct()),
-                        "host",
-                        "left_anti",
-                    )
-                    .unionByName(refreshed)
-                    .withColumn("bucket", bucket_of(F.col("host")))
-                )
-                v = self.store.write_version_bucketed(
-                    "robots_cache",
-                    full.repartition(
-                        max(1, min(cfg.num_partitions, n_buckets)), "bucket"
-                    ),
-                    [],
-                    link_clean=False,
-                )
-                return v, [v]
-            # delta layout disabled (state_delta_max_chain=0, the r02
-            # layout): dirty-bucket incremental rewrite, clean buckets
-            # hard-linked — the pre-r5 path, kept for that config
-            dirty = sorted(
-                int(x["b"])
-                for x in refreshed.select(bucket_of(F.col("host")).alias("b"))
-                .distinct()
-                .collect()
-            )
-            old_dirty = robots_cache_raw.filter(
-                F.col("bucket").isin(dirty) if dirty else F.lit(False)
-            ).drop("bucket")
-            new_dirty = (
-                old_dirty.join(
-                    F.broadcast(refreshed.select("host").distinct()),
-                    "host",
-                    "left_anti",
-                )
-                .unionByName(refreshed)
-                .withColumn("bucket", bucket_of(F.col("host")))
-            )
-            n_write = max(1, min(cfg.num_partitions, len(dirty) or 1))
-            v = self.store.write_version_bucketed(
-                "robots_cache", new_dirty.repartition(n_write, "bucket"), dirty
-            )
-            return v, [v]
+            # nothing re-fetched this round: the committed version is
+            # already current — no write job at all
+            if rd.robots_cache.chain() and gate.refreshed.isEmpty():
+                return rd.robots_cache.current()
+            return rd.robots_cache.write(gate.refreshed)
 
         def _sessions():
             # tiny per-host table (only auth-gated hosts ever get rows);
             # when no URL deferred this round no new session can exist —
             # reuse the committed version, skip the job entirely
-            if auth_deferred.isEmpty():
-                return self.store.current_version("auth_sessions")
-            return self.store.write_version("auth_sessions", sessions_next)
+            if gate.auth_deferred.isEmpty():
+                return store.current_version("auth_sessions")
+            return store.write_version("auth_sessions", gate.sessions_next)
 
         # Materialize the round's heavy shared parent ONCE (the fetch
         # join + status/extraction projection), then overlap its
-        # independent consumers in threads: the dirty-bucket collect
-        # (which also materializes the seen_updates pin every persist job
-        # reuses), the exploded resolve+canonicalize extraction pin
-        # (the round's regex-heaviest projection, needed by the fan-out's
-        # _frontier and _stats jobs), and the two early persists —
-        # robots_cache and auth_sessions read only pins the fetch job
-        # already materialized (refreshed, gated), so they overlap the
-        # extraction materialize instead of serializing after it in the
-        # write tail.  Sequencing fetched first matters: two concurrent
+        # independent consumers in threads: the seen_updates pin every
+        # persist job reuses, the exploded resolve+canonicalize
+        # extraction pin (the round's regex-heaviest projection, needed
+        # by the frontier and host_stats jobs), and the two early
+        # persists — robots_cache and auth_sessions read only pins the
+        # fetch job already materialized (refreshed, gated), so they
+        # overlap the extraction materialize instead of serializing
+        # after it in the write tail.  Sequencing matters: two concurrent
         # jobs racing to compute a not-yet-materialized pin would each
-        # schedule the full fetch join.
+        # schedule its full upstream (the fetch join first of all).
         fetched.count()
-        _mark("fetched_materialize")
         pool = ThreadPoolExecutor(max_workers=8)
         try:
-            f_rv = pool.submit(_timed(_robots_cache))
-            f_sv = pool.submit(_timed(_sessions))
-            _f_dirty = pool.submit(
-                lambda: sorted(
-                    int(x["bucket"])
-                    for x in upd.select("bucket").distinct().collect()
-                )
-            )
-            _f_ex = pool.submit(extracted_with_depth.count)
-            dirty_buckets = _f_dirty.result()
-            _f_ex.result()
-        except BaseException:
-            pool.shutdown(wait=False, cancel_futures=True)
-            raise
-        _mark("seen_updates_and_extract_materialize")
-        if will_delta:
-            merged_dirty = None  # nothing to merge at write time
-        else:
-            if full_rewrite:
-                is_dirty = F.lit(True)
-            elif dirty_buckets:
-                is_dirty = F.col("bucket").isin(dirty_buckets)
-            else:
-                is_dirty = F.lit(False)
-            # url alone is the key (primary key of url_seen; host is
-            # derived from it) — a single plain-equality key lets the
-            # state side reuse the reconstruction's hash(url)
-            # partitioning on compaction rounds (see dedup.py).
-            upd_keys = seen_updates.select(F.col("url").alias("u_url"))
-            merged_dirty = _pin(
-                cur_seen.filter(is_dirty)
-                .join(upd_keys, F.col("url") == F.col("u_url"), "left_anti")
-                .select(*seen_cols, "bucket")
-                .unionByName(upd.select(*seen_cols, "bucket"))
-            )
+            f_rc = pool.submit(_robots_cache)
+            f_sv = pool.submit(_sessions)
+            f_seen = pool.submit(seen_updates.count)
+            f_ex = pool.submit(extracted.count)
+            f_seen.result()
+            f_ex.result()
 
-        # Dedupe before writing: extraction emits the same URL from many
-        # parents (3-4x write amplification otherwise).  The dedupe keys
-        # on the uniform (url, host) hash — safe under the zipf-heavy
-        # target-host skew of the raw extracted stream — and the written
-        # frontier stays in that uniform layout: the next round starts
-        # with its own routing repartition by host, so a host-grouping
-        # shuffle here would move the round's largest intermediate a
-        # second time for a layout nothing consumes.  Recrawl rows are
-        # NOT written here — they are derived from url_seen at the next
-        # round's read (merge-on-read recrawl, see top of round).
-        next_frontier = _pin(
-            dedupe_within_batch(next_frontier.select(*CANDIDATE_COLS))
-            .select(*CANDIDATE_COLS)
+            # Dedupe before writing: extraction emits the same URL from
+            # many parents (3-4x write amplification otherwise).  The
+            # dedupe keys on the uniform (url, host) hash — safe under the
+            # zipf-heavy target-host skew of the raw extracted stream —
+            # and the written frontier stays in that uniform layout: the
+            # next round starts with its own routing repartition by host,
+            # so a host-grouping shuffle here would move the round's
+            # largest intermediate a second time for a layout nothing
+            # consumes.  Recrawl rows are NOT written here — they are
+            # derived from url_seen at the next round's read
+            # (merge-on-read recrawl, see _read_state).
+            next_frontier = rd.pin(
+                dedupe_within_batch(next_frontier.select(*CANDIDATE_COLS))
+                .select(*CANDIDATE_COLS)
+            )
+            wall_ms = int((time.monotonic() - rd.t_start) * 1000)
+            lineage = rd.pin(self._lineage(
+                rd, wall_ms, candidates, scheduled, fetched, gate.robots_blocked
+            ))
+
+            # The persists are data-independent (they share only pinned
+            # parents), so they run as concurrent Spark jobs from driver
+            # threads — the per-job driver overhead overlaps instead of
+            # serializing.  Nothing is visible until the manifest commit.
+            f_log = pool.submit(store.append_round, "crawl_log", crawl_log, r)
+            f_lin = pool.submit(store.append_round, "lineage_metrics", lineage, r)
+            f_uv = pool.submit(rd.url_seen.write, seen_updates)
+            f_hv = pool.submit(rd.host_stats.write, inlink_delta)
+            f_fv = pool.submit(store.write_version, "frontier", next_frontier)
+            f_bv = pool.submit(self._write_bloom, seen_updates)
+            f_log.result()
+            f_lin.result()
+            (uv, url_chain), (hv, hs_chain), (rv, rc_chain) = (
+                f_uv.result(), f_hv.result(), f_rc.result()
+            )
+            fv, bv, sv = f_fv.result(), f_bv.result(), f_sv.result()
+        finally:
+            # wait for in-flight writers even when one failed: a resume
+            # in this process must not race a sibling still writing the
+            # next version dirs (queued jobs are cancelled)
+            pool.shutdown(wait=True, cancel_futures=True)
+        store.commit(
+            r,
+            {"url_seen": uv, "host_stats": hv, "frontier": fv, "bloom": bv,
+             "robots_cache": rv, "auth_sessions": sv},
+            meta={"state_buckets": rd.n_buckets},
+            delta_chains={
+                "url_seen": url_chain,
+                "host_stats": hs_chain,
+                "robots_cache": rc_chain,
+            },
         )
+        # GC: superseded versions are unreachable once the manifest moved on;
+        # keep one prior snapshot for post-hoc inspection (Iceberg's
+        # expire_snapshots analogue)
+        store.vacuum(keep_last=2)
+        return wall_ms, lineage, next_frontier
 
-        # ----- lineage / metrics (A3/A4/A6) per host-shard.
-        # Round totals (scheduled/fetched/blocked) are summed from this
-        # per-partition lineage table after the persist fan-out instead of
-        # running separate count() jobs over the same cached data.
-        # One tagged union + ONE hash aggregate instead of four groupBys
-        # stitched by three full-outer joins: the per-partition counters
-        # all key on the same shard id, so a single shuffle suffices.
-        wall_ms = int((time.monotonic() - t_start) * 1000)
+    def _write_bloom(self, seen_updates: DataFrame) -> int:
+        """Incremental bloom update with this round's seen URLs: OR-merge
+        + write happen INSIDE the executor task per shard; the driver
+        only links untouched shards — no S*m/8 array in driver memory."""
+        # looked up at call time, so a wrapper installed on the module
+        # (e.g. a tracer) sees every call
+        from ..operators.bloom import update_and_save_shards
+
+        cur_bv = self.store.current_version("bloom")
+        prev = self._bloom_path(cur_bv) if cur_bv >= 0 else None
+        if prev is not None:
+            meta = BloomShards.dir_meta(prev)
+            S_, m_, k_ = meta["num_shards"], meta["m"], meta["k"]
+        else:
+            S_, m_, k_ = self.cfg.bloom_shards, self.cfg.bloom_bits_per_shard, 7
+        update_and_save_shards(
+            seen_updates.select("url", "host"),
+            self._bloom_path(cur_bv + 1),
+            prev,
+            S_,
+            m_,
+            k_,
+        )
+        # invalidate the lazily-loaded driver copy (broadcast-probe
+        # path reloads the new version's shard files next round)
+        self._bloom = None
+        return cur_bv + 1
+
+    def _lineage(
+        self,
+        rd: _Round,
+        wall_ms: int,
+        candidates: DataFrame,
+        scheduled: DataFrame,
+        fetched: DataFrame,
+        robots_blocked: DataFrame,
+    ) -> DataFrame:
+        """Lineage / metrics (A3/A4/A6) per host-shard.
+
+        Round totals (scheduled/fetched/blocked) are summed from this
+        per-partition lineage table after the persist fan-out instead of
+        running separate count() jobs over the same pinned data.  One
+        tagged union + ONE hash aggregate instead of four groupBys
+        stitched by three full-outer joins: the per-partition counters
+        all key on the same shard id, so a single shuffle suffices."""
         snapshot = json.dumps(self.store.manifest()["tables"], sort_keys=True)
+        shard = lambda c: host_partition_key(c, self.cfg.num_partitions)
 
         def _tagged(df, tag):
             return df.select(
@@ -1219,7 +1248,7 @@ class CrawlEngine:
         tally = lambda tag: F.sum(
             F.when(F.col("_k") == tag, 1).otherwise(0)
         )
-        lineage = (
+        return (
             _tagged(candidates, "in")
             .unionByName(_tagged(scheduled, "sched"))
             .unionByName(_tagged(fetched, "fetch"))
@@ -1232,7 +1261,7 @@ class CrawlEngine:
                 tally("blocked").alias("urls_robots_blocked"),
             )
             .select(
-                F.lit(r).alias("round"),
+                F.lit(rd.r).alias("round"),
                 F.col("partition_id").cast("int"),
                 F.col("urls_in"),
                 (F.col("urls_in") - F.col("urls_scheduled")).alias("urls_deduped"),
@@ -1243,214 +1272,8 @@ class CrawlEngine:
                 F.lit(snapshot).alias("input_snapshot"),
             )
         )
-        lineage = _pin(lineage)
 
-        # ----- persist + atomic commit.
-        # The persists are data-independent (they share only cached
-        # parents), so they run as concurrent Spark jobs from driver
-        # threads — the per-job driver overhead overlaps instead of
-        # serializing.  robots_cache and auth_sessions were submitted
-        # earlier (overlapping the extraction materialize); the rest
-        # join the same pool here.  Nothing is visible until the
-        # manifest commit.
-        def _crawl_log():
-            self.store.append_round("crawl_log", crawl_log, r)
-
-        def _lineage():
-            self.store.append_round("lineage_metrics", lineage, r)
-
-        def _merge():
-            if will_delta:
-                # delta append: write ONLY this round's updates,
-                # UNPARTITIONED (bucket stays a plain column) and in the
-                # pin's existing wave partitioning.  url_seen reads are
-                # always full reconstructions (validate join + recrawl
-                # scan touch every bucket), so bucket=N dirs buy no
-                # pruning here and a 256-bucket wave would shatter each
-                # delta into ~256 tiny files (the r5 state_reads
-                # profile's dominant term); skipping the repartition
-                # also drops a per-round O(|wave|) shuffle.
-                return self.store.write_version_delta(
-                    "url_seen", upd, partitioned=False
-                )
-            # bucketed rewrite: dirty buckets written, clean buckets
-            # hard-linked — except on compaction/migration rounds, where
-            # the current version dir is a partial delta (or flat legacy)
-            # and nothing may be linked from it.
-            n_write = (
-                cfg.num_partitions
-                if full_rewrite
-                else max(1, min(cfg.num_partitions, len(dirty_buckets)))
-            )
-            df = merged_dirty.repartition(n_write, "bucket")
-            return self.store.write_version_bucketed(
-                "url_seen", df, dirty_buckets, link_clean=not full_rewrite
-            )
-
-        # host_stats delta-chain bookkeeping (mirrors url_seen's): a
-        # normal round APPENDS only this round's inlink increments; every
-        # state_delta_max_chain rounds (or on legacy-layout migration) the
-        # chain-sum reconstruction is compacted to one bucketed base.
-        hs_chain = self.store.delta_chain("host_stats")
-        hs_base_v = self.store.current_version("host_stats")
-        hs_cur_chain = hs_chain if hs_chain else ([hs_base_v] if hs_base_v >= 0 else [])
-        hs_delta_on = cfg.state_delta_max_chain > 0 and hs_has_bucket
-        hs_will_delta = (
-            hs_delta_on
-            and len(hs_cur_chain) >= 1
-            and len(hs_cur_chain) < cfg.state_delta_max_chain
-        )
-
-        def _stats():
-            if hs_will_delta:
-                # unpartitioned delta (bucket stays a column): a delta is
-                # O(|wave hosts|) rows, so shattering it into bucket=N
-                # one-row dir files costs more to re-open than it saves;
-                # wave-sliced reads keep PartitionFilter pruning on the
-                # bucketed BASE (the O(|hosts|) member) and filter the
-                # small deltas by column stats.  coalesce, not
-                # repartition: no shuffle, just fewer output files.
-                delta = inlink_delta.withColumn("bucket", bucket_of(F.col("host")))
-                return self.store.write_version_delta(
-                    "host_stats",
-                    delta.coalesce(max(1, cfg.num_partitions // 4)),
-                    partitioned=False,
-                )
-            # compaction or legacy migration: one full bucketed rewrite of
-            # the cumulative view — the only round that touches all hosts
-            full = merged_stats.withColumn("bucket", bucket_of(F.col("host")))
-            return self.store.write_version_bucketed(
-                "host_stats",
-                full.repartition(max(1, min(cfg.num_partitions, n_buckets)), "bucket"),
-                [],
-                link_clean=False,
-            )
-
-        def _frontier():
-            return self.store.write_version("frontier", next_frontier)
-
-        def _bloom():
-            # incremental bloom update with this round's newly-seen URLs:
-            # OR-merge + write happen INSIDE the executor task per shard
-            # (operators/bloom.py update_and_save_shards); the driver only
-            # links untouched shards — no S*m/8 array in driver memory.
-            from ..operators.bloom import update_and_save_shards
-
-            cur_bv = self.store.current_version("bloom")
-            prev = self._bloom_path(cur_bv)
-            legacy_npz = prev + ".npz"
-            if cur_bv >= 0 and os.path.exists(legacy_npz):
-                # pre-r2 single-file state: one driver-side migration
-                # round rewrites it in the per-shard dir format
-                dirty_shards = self.bloom.update_from_df(
-                    seen_updates.select("url", "host")
-                )
-                self.bloom.save_dir(self._bloom_path(cur_bv + 1))
-                self._bloom = None
-                return cur_bv + 1
-            if cur_bv >= 0 and os.path.isdir(prev):
-                meta = BloomShards.dir_meta(prev)
-                S_, m_, k_ = meta["num_shards"], meta["m"], meta["k"]
-                prev_dir = prev
-            else:
-                S_, m_, k_ = cfg.bloom_shards, cfg.bloom_bits_per_shard, 7
-                prev_dir = None
-            update_and_save_shards(
-                seen_updates.select("url", "host"),
-                self._bloom_path(cur_bv + 1),
-                prev_dir,
-                S_,
-                m_,
-                k_,
-            )
-            # invalidate the lazily-loaded driver copy (broadcast-probe
-            # path reloads the new version's shard files next round)
-            self._bloom = None
-            return cur_bv + 1
-
-        try:
-            f_log = pool.submit(_timed(_crawl_log))
-            f_lin = pool.submit(_timed(_lineage))
-            f_uv = pool.submit(_timed(_merge))
-            f_hv = pool.submit(_timed(_stats))
-            f_fv = pool.submit(_timed(_frontier))
-            f_bv = pool.submit(_timed(_bloom))
-            f_log.result()
-            f_lin.result()
-            uv, hv, fv, bv, sv = (
-                f_uv.result(), f_hv.result(), f_fv.result(), f_bv.result(),
-                f_sv.result(),
-            )
-            rv, rc_new_chain = f_rv.result()
-        finally:
-            pool.shutdown(wait=False, cancel_futures=True)
-        _mark('persist_fanout')
-        self.store.commit(
-            r,
-            {"url_seen": uv, "host_stats": hv, "frontier": fv, "bloom": bv,
-             "robots_cache": rv, "auth_sessions": sv},
-            meta={"state_buckets": n_buckets},
-            delta_chains={
-                "url_seen": (cur_chain + [uv]) if will_delta else [uv],
-                "host_stats": (hs_cur_chain + [hv]) if hs_will_delta else [hv],
-                "robots_cache": rc_new_chain,
-            },
-        )
-        # GC: superseded versions are unreachable once the manifest moved on;
-        # keep one prior snapshot for post-hoc inspection (Iceberg's
-        # expire_snapshots analogue)
-        self.store.vacuum(keep_last=2)
-        _mark('commit_vacuum')
-
-        totals = lineage.groupBy().agg(
-            F.sum("urls_scheduled").alias("s"),
-            F.sum("urls_fetched").alias("f"),
-            F.sum("urls_robots_blocked").alias("b"),
-        ).collect()[0]
-        n_sched, n_fetched, n_blocked = int(totals["s"] or 0), int(totals["f"] or 0), int(totals["b"] or 0)
-        n_next = None if cfg.light_stats else next_frontier.count()
-        _mark('n_next_count')
-        for df in (
-            candidates,
-            gated,
-            ranked,
-            fetched,
-            extracted_with_depth,
-            seen_updates,
-            next_frontier,
-            merged_dirty,
-            url_seen_pre,
-            cand_hosts,
-            cache_slice,
-            src_rules,
-            refreshed,
-            wave_rules,
-            lineage,
-        ):
-            if df is not None:
-                df.unpersist()
-        # every plan referencing this round's bloom broadcast has
-        # materialized (the persist fan-out is complete), so the handle
-        # can be destroyed — otherwise each round leaks one bitset copy
-        while self._round_bcs:
-            self._round_bcs.pop().destroy()
-        _mark('unpersist')
-        if _timing:
-            print(f"ROUND_TIMING r={r} " + json.dumps(_phases))
-        # return contract: under cfg.light_stats the info-only counters
-        # "candidates"/"new_candidates" are None (not 0, not a sentinel
-        # int) — consumers aggregating per-round counts must skip None.
-        return {
-            "round": r,
-            "candidates": n_in,
-            "scheduled": n_sched,
-            "robots_blocked": n_blocked,
-            "fetched": n_fetched,
-            "new_candidates": n_next,
-            "wall_ms": wall_ms,
-        }
-
-    def _commit_empty(self, r: int, t_start: float) -> None:
+    def _commit_empty(self, r: int) -> None:
         empty_log = self.spark.createDataFrame([], S.CRAWL_LOG_SCHEMA)
         self.store.append_round("crawl_log", empty_log, r)
         self.store.append_round(

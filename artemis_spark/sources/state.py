@@ -5,8 +5,9 @@ isolation, resume-from-any-round).  Iceberg jars are absent in this
 environment (session.py:ICEBERG_AVAILABLE), so this module provides the
 same contract over plain parquet:
 
-  * every mutable table (url_seen, host_stats, frontier, bloom bits)
-    is written as a new immutable version directory ``<table>/v{n}``;
+  * every mutable table (url_seen, host_stats, robots_cache, frontier,
+    bloom bits) is written as a new immutable version directory
+    ``<table>/v{n}``;
   * a round is committed by atomically replacing ``MANIFEST.json``
     (os.replace) pointing at the exact version of every table plus the
     round high-water mark — the snapshot;
@@ -14,12 +15,19 @@ same contract over plain parquet:
     ``<table>/round={r}`` partition dirs, idempotently overwritten if a
     crashed round re-runs.
 
+The three per-host state tables (url_seen, host_stats, robots_cache)
+are delta logs, each served by one :class:`DeltaTable`: a bucketed base
+plus a chain of small per-round deltas recorded in the manifest's
+``delta_chains``, reconstructed on read by the table's merge reduce
+(``DELTA_MERGE``).  A round appends only its update rows (O(|wave|)
+write cost, Iceberg merge-on-read's analogue); a table without a chain,
+or whose chain reached ``max_chain``, instead writes a new bucketed
+base computed by the same reduce over the chain plus the new rows —
+the compaction that bounds read amplification.
+
 Crash anywhere before the manifest swap leaves the previous snapshot
 intact; resume re-runs the incomplete round from its inputs.  On a real
-cluster the same interface maps 1:1 onto Iceberg MERGE + snapshot ids;
-the MERGE emulation (read current + anti-join + union + write next
-version) is the documented cost of the fallback: O(|state|) rewrite per
-round instead of Iceberg's file-level merge-on-read.
+cluster the same interface maps 1:1 onto Iceberg MERGE + snapshot ids.
 
 Reference analogue: there is none — the reference's state is RAM-only
 ARC caches that die with the process (/root/reference/src/Cache.py:54-135);
@@ -32,8 +40,9 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Per-table primary key for delta-chain reconstruction.  Only tables
 # registered here may use write_version_delta.
@@ -116,10 +125,14 @@ class StateStore:
             f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
         )
 
+    def _live(self, table: str, chain: list[int]) -> list[int]:
+        """The chain members that hold parquet files (see read())."""
+        return [v for v in chain if self._has_files(self._vdir(table, v))]
+
     def read(self, table: str, schema=None) -> DataFrame | None:
         chain = self.delta_chain(table)
         if len(chain) > 1:
-            live = [v for v in chain if self._has_files(self._vdir(table, v))]
+            live = self._live(table, chain)
             if live:
                 return self._read_chain(table, live)
             # fall through: an entirely-empty chain behaves like an
@@ -136,22 +149,26 @@ class StateStore:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(path)
 
-    def _read_chain(self, table: str, chain: list[int]) -> DataFrame:
+    def _read_chain(
+        self, table: str, chain: list[int], tail: DataFrame | None = None
+    ) -> DataFrame:
         """Merge-on-read for a delta-layout table: base + deltas unioned
-        with a chain sequence number, then last-writer-wins per key via
-        one ``max_by`` hash aggregate.  Grouping includes the stored
-        ``bucket`` partition column (functionally dependent on the key's
-        host), so bucket predicates above this read still prune the
-        scan.  This is the read-side cost of O(|updates|)-per-round
-        writes; compaction bounds the chain length."""
+        with a chain sequence number, then reduced per key by the
+        table's ``DELTA_MERGE`` rule.  ``tail`` is one more member after
+        the chain — a compaction's new rows — so a compaction is exactly
+        this reduce, and each table's merge is defined here only.
+        Grouping includes the stored ``bucket`` partition column
+        (functionally dependent on the key's host), so bucket predicates
+        above this read still prune the scan.  This is the read-side
+        cost of O(|updates|)-per-round writes; compaction bounds the
+        chain length."""
         key = DELTA_KEYS[table]
-        dfs = [
-            self.spark.read.parquet(self._vdir(table, v)).withColumn("_seq", F.lit(i))
-            for i, v in enumerate(chain)
-        ]
-        u = dfs[0]
-        for d in dfs[1:]:
-            u = u.unionByName(d)
+        dfs = [self.spark.read.parquet(self._vdir(table, v)) for v in chain]
+        if tail is not None:
+            dfs.append(tail)
+        u = dfs[0].withColumn("_seq", F.lit(0))
+        for i, d in enumerate(dfs[1:], 1):
+            u = u.unionByName(d.withColumn("_seq", F.lit(i)))
         if DELTA_MERGE.get(table, "last") == "group_last":
             # the key groups multiple rows (robots: one row per pattern)
             # and a refresh replaces the whole group, so the winner is
@@ -184,9 +201,9 @@ class StateStore:
         # Group on the key ALONE (bucket, functionally dependent on the
         # key's host, is folded in via max()): the reconstruction then
         # leaves the state hash-partitioned on exactly the key its
-        # downstream joins use (validate-against-seen, compaction MERGE
-        # anti-join), so those joins reuse this aggregate's exchange
-        # instead of re-shuffling the full state once more per round.
+        # downstream join uses (validate-against-seen), so that join
+        # reuses this aggregate's exchange instead of re-shuffling the
+        # full state once more per round.
         val_cols = [c for c in u.columns if c not in (key, "bucket", "_seq")]
         return (
             u.groupBy(key)
@@ -197,86 +214,48 @@ class StateStore:
             .select(key, "_r.*", "bucket")
         )
 
-    def write_version(self, table: str, df: DataFrame) -> int:
-        """Write df as the next version dir; returns the version number
-        (caller passes it to commit()). Not visible until committed."""
+    def _next_vdir(self, table: str) -> tuple[int, str]:
+        """The next version number and its (cleared) directory."""
         v = self.current_version(table) + 1
         path = self._vdir(table, v)
         if os.path.exists(path):  # leftover from a crashed round
             shutil.rmtree(path)
+        return v, path
+
+    def write_version(self, table: str, df: DataFrame) -> int:
+        """Write df as the next version dir; returns the version number
+        (caller passes it to commit()). Not visible until committed."""
+        v, path = self._next_vdir(table)
         df.write.mode("overwrite").parquet(path)
         return v
 
-    def write_version_delta(
-        self, table: str, upd_df: DataFrame, partitioned: bool = True
-    ) -> int:
+    def write_version_delta(self, table: str, upd_df: DataFrame) -> int:
         """Append-only delta version for a delta-chain table: writes ONLY
         the round's update rows — per-round write cost is O(|updates|)
         regardless of how many buckets they touch.  The caller records
         the new version in the manifest's ``delta_chains`` via commit();
-        read() then reconstructs last-writer-wins.  This is the parquet
-        stand-in for Iceberg's merge-on-read delete/data files.
+        read() then reconstructs per key.  This is the parquet stand-in
+        for Iceberg's merge-on-read delete/data files.
 
-        ``partitioned`` controls the physical layout: bucket=N partition
-        dirs serve tables whose READS prune on the stored bucket column
-        (host_stats / robots_cache wave slices — PartitionFilters skip
-        whole directories); tables that are always reconstructed in full
-        (url_seen: the validate join and recrawl scan read every bucket)
-        must pass False and keep ``bucket`` as a plain column — a
-        256-bucket wave would otherwise shatter every delta into ~256
-        tiny files and the per-round chain scan degenerates into file-
-        open overhead (measured: 12-33 s/round at local[1] by chain
-        length 6, the dominant term of the r5 state_reads profile)."""
+        Unpartitioned: ``bucket`` stays a plain column.  A delta holds
+        one round's rows, so bucket=N dirs would shatter it into ~|wave
+        buckets| tiny files and the per-round chain scan degenerates
+        into file-open overhead (measured: 12-33 s/round at local[1] by
+        chain length 6, the dominant term of the r5 state_reads
+        profile); wave-sliced reads keep PartitionFilter pruning on the
+        bucketed base, the only O(|state|)-sized member."""
         if table not in DELTA_KEYS:
             raise ValueError(f"no delta key registered for table {table!r}")
-        v = self.current_version(table) + 1
-        path = self._vdir(table, v)
-        if os.path.exists(path):  # leftover from a crashed round
-            shutil.rmtree(path)
-        w = upd_df.write.mode("overwrite")
-        if partitioned:
-            w = w.partitionBy("bucket")
-        w.parquet(path)
+        v, path = self._next_vdir(table)
+        upd_df.write.mode("overwrite").parquet(path)
         return v
 
-    def write_version_bucketed(
-        self,
-        table: str,
-        dirty_df: DataFrame,
-        dirty_buckets: list[int],
-        link_clean: bool = True,
-    ) -> int:
-        """Incremental version write for a host-bucketed state table.
-
-        ``dirty_df`` carries a ``bucket`` int column covering exactly
-        ``dirty_buckets``; it is written partitioned by bucket, and every
-        clean bucket directory of the current version is HARD-LINKED into
-        the new version dir (byte-identical, no IO).  This is the parquet
-        stand-in for an Iceberg MERGE whose new snapshot manifest simply
-        references the untouched data files: per-round write cost is
-        O(|dirty buckets|), not O(|state|) — the fix for the round-scales-
-        with-history scale-killer (VERDICT r01).
-        """
-        v = self.current_version(table) + 1
-        path = self._vdir(table, v)
-        if os.path.exists(path):  # leftover from a crashed round
-            shutil.rmtree(path)
-        dirty_df.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        cur_v = self.current_version(table)
-        if link_clean and cur_v >= 0:
-            cur = self._vdir(table, cur_v)
-            dirty = set(int(b) for b in dirty_buckets)
-            for d in os.listdir(cur):
-                if not d.startswith("bucket="):
-                    continue
-                k = int(d.split("=", 1)[1])
-                if k in dirty:
-                    continue
-                src, dst = os.path.join(cur, d), os.path.join(path, d)
-                os.makedirs(dst, exist_ok=True)
-                for f in os.listdir(src):
-                    if f.endswith(".parquet"):
-                        os.link(os.path.join(src, f), os.path.join(dst, f))
+    def write_version_bucketed(self, table: str, df: DataFrame) -> int:
+        """Full version write of a host-bucketed table, partitioned by
+        its ``bucket`` int column: the base of a delta chain, whose
+        bucket=N dirs let wave-sliced reads prune by PartitionFilter."""
+        v, path = self._next_vdir(table)
+        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
         return v
 
     def merge_upsert(self, table: str, updates: DataFrame, key: str, schema) -> int:
@@ -336,3 +315,79 @@ class StateStore:
                     and int(d[1:]) not in pinned
                 ):
                     shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
+
+
+def bucket_of(host: Column, n_buckets: int) -> Column:
+    """The state bucket of a host: pmod(xxhash64(host), n_buckets)."""
+    return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
+
+
+class DeltaTable:
+    """One delta-log state table: url_seen, host_stats or robots_cache.
+
+    The write rule, the same for all three: a table with no chain entry
+    (bootstrap's empty flat v0, or no version yet) or whose chain has
+    reached ``max_chain`` members writes a new bucketed base — the
+    ``_read_chain`` reduce over the chain plus the new rows, partitioned
+    into ``base_parts`` tasks by bucket; any other round appends the new
+    rows as an unpartitioned delta, coalesced to ``delta_parts`` files
+    when given (None keeps the rows' own partitioning).  ``max_chain``
+    <= 1 compacts every round.
+
+    Every store access goes through ``self.store.<method>`` at call
+    time, so wrappers installed on the store after construction (e.g. a
+    tracer) see each read and write.
+    """
+
+    def __init__(
+        self,
+        store: StateStore,
+        name: str,
+        schema: T.StructType,
+        n_buckets: int,
+        max_chain: int,
+        base_parts: int,
+        delta_parts: int | None = None,
+    ):
+        self.store = store
+        self.name = name
+        self.schema = T.StructType(
+            schema.fields + [T.StructField("bucket", T.IntegerType(), True)]
+        )
+        self.n_buckets = n_buckets
+        self.max_chain = max_chain
+        self.base_parts = base_parts
+        self.delta_parts = delta_parts
+
+    def chain(self) -> list[int]:
+        return self.store.delta_chain(self.name)
+
+    def read(self) -> DataFrame:
+        """The committed view, with the ``bucket`` column.  A table with
+        no chain entry has no live rows (bootstrap's v0 is empty), so it
+        reads as an empty frame."""
+        if not self.chain():
+            return self.store.spark.createDataFrame([], self.schema)
+        return self.store.read(self.name, self.schema)
+
+    def current(self) -> tuple[int, list[int]]:
+        """(version, chain) of the committed state — what a round that
+        writes nothing re-records in the manifest."""
+        return self.store.current_version(self.name), self.chain()
+
+    def write(self, rows: DataFrame) -> tuple[int, list[int]]:
+        """Write the round's rows (keyed by ``host``-derived bucket);
+        returns (version, new chain) for the manifest commit."""
+        chain = self.chain()
+        rows = rows.withColumn("bucket", bucket_of(F.col("host"), self.n_buckets))
+        if chain and len(chain) < self.max_chain:
+            if self.delta_parts is not None:
+                rows = rows.coalesce(self.delta_parts)
+            v = self.store.write_version_delta(self.name, rows)
+            return v, chain + [v]
+        live = self.store._live(self.name, chain)
+        merged = self.store._read_chain(self.name, live, tail=rows)
+        v = self.store.write_version_bucketed(
+            self.name, merged.repartition(self.base_parts, "bucket")
+        )
+        return v, [v]

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -111,11 +112,8 @@ def bench_crawl(spark, tier: str, rounds: int, budget: int) -> dict:
         extract_markup=bool(int(os.environ.get("ARTEMIS_BENCH_MARKUP", "1"))),
         decode_payloads=bool(int(os.environ.get("ARTEMIS_BENCH_DECODE", "1"))),
     )
-    # A/B knobs (default to the CrawlConfig defaults when unset):
-    # plan pinning strategy and delta-chain compaction threshold
-    pin_env = os.environ.get("ARTEMIS_BENCH_PLAN_PIN")
-    if pin_env is not None:
-        cfg.plan_pin = bool(int(pin_env))
+    # A/B knob (defaults to the CrawlConfig default when unset):
+    # delta-chain compaction threshold
     chain_env = os.environ.get("ARTEMIS_BENCH_MAX_CHAIN")
     if chain_env is not None:
         cfg.state_delta_max_chain = int(chain_env)
@@ -133,13 +131,11 @@ def bench_crawl(spark, tier: str, rounds: int, budget: int) -> dict:
     steady = [s for s in stats if s["round"] >= 1 and s.get("round_wall_ms")]
     steady_urls = sum(s.get("scheduled", 0) + s.get("fetched", 0) for s in steady)
     steady_wall = sum(s.get("round_wall_ms", 0) for s in steady) / 1000.0
-    per_round_tput = sorted(
+    per_round_tput = [
         (s.get("scheduled", 0) + s.get("fetched", 0)) / (s["round_wall_ms"] / 1000.0)
         for s in steady
-    )
-    median_tput = (
-        per_round_tput[len(per_round_tput) // 2] if per_round_tput else None
-    )
+    ]
+    median_tput = statistics.median(per_round_tput) if per_round_tput else None
     shutil.rmtree(state_dir, ignore_errors=True)
     return {
         "urls_per_sec": round(urls / wall, 1),

@@ -1,5 +1,5 @@
 """Bloom-shard layer: no false negatives ever, bounded false positives,
-incremental distributed build, save/load roundtrip (F1 tier;
+incremental per-shard build, saved-dir roundtrip (F1 tier;
 reference analogue Slave.py:112,118-142)."""
 
 import numpy as np
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from artemis_spark.functions.urls import host_partition_key
 from artemis_spark.operators.bloom import (
     BloomShards,
+    update_and_save_shards,
     with_bloom_maybe_seen,
     with_bloom_maybe_seen_shard_local,
 )
@@ -34,71 +35,62 @@ def test_shard_isolation():
     assert not bs.might_contain(np.array([1]), pd.Series(["http://a.test/x"]))[0]
 
 
-def test_save_load_roundtrip(tmp_path):
-    bs = BloomShards(3, bits_per_shard=1 << 14, n_hashes=5)
-    bs.add(1, pd.Series(["u1", "u2"]))
-    p = str(tmp_path / "bloom.npz")
-    bs.save(p)
-    bs2 = BloomShards.load(p)
-    assert bs2.m == bs.m and bs2.k == bs.k
-    assert (bs2.bits == bs.bits).all()
-
-
-def test_distributed_build_and_probe(spark):
-    bs = BloomShards(8, bits_per_shard=1 << 16)
-    df = spark.createDataFrame(
-        [(f"http://h{i%11}.test/p{i}", f"h{i%11}.test") for i in range(500)],
+def _urls(spark, tag):
+    return spark.createDataFrame(
+        [(f"http://h{i%11}.test/{tag}{i}", f"h{i%11}.test") for i in range(500)],
         "url string, host string",
     )
-    bs.update_from_df(df)
+
+
+def test_distributed_build_and_probe(spark, tmp_path):
+    df = _urls(spark, "p")
+    v0 = str(tmp_path / "v0")
+    update_and_save_shards(df, v0, None, 8, 1 << 16)
+    bs = BloomShards.load_dir(v0)
     probed = with_bloom_maybe_seen(spark, df, bs)
     assert probed.where(~F.col("maybe_seen")).count() == 0  # all known
-    fresh = spark.createDataFrame(
-        [(f"http://h{i%11}.test/NEW{i}", f"h{i%11}.test") for i in range(500)],
-        "url string, host string",
-    )
+    fresh = _urls(spark, "NEW")
     fp = with_bloom_maybe_seen(spark, fresh, bs).where(F.col("maybe_seen")).count()
     assert fp < 25  # <5% false positives skip the anti-join bypass
 
     # incremental: second update must not lose the first round's URLs
-    bs.update_from_df(fresh)
+    v1 = str(tmp_path / "v1")
+    update_and_save_shards(fresh, v1, v0, 8, 1 << 16)
+    bs = BloomShards.load_dir(v1)
     assert with_bloom_maybe_seen(spark, df, bs).where(~F.col("maybe_seen")).count() == 0
     assert with_bloom_maybe_seen(spark, fresh, bs).where(~F.col("maybe_seen")).count() == 0
 
 
-def test_save_dir_roundtrip_and_hardlink_reuse(tmp_path):
+def test_save_dir_roundtrip_and_hardlink_reuse(spark, tmp_path):
     import os
 
-    bs = BloomShards(4, bits_per_shard=1 << 14, n_hashes=5)
-    bs.add(1, pd.Series(["u1", "u2"]))
     p1 = str(tmp_path / "v0")
-    bs.save_dir(p1)
-    assert (BloomShards.load(p1).bits == bs.bits).all()  # load() dispatches on dir
+    one = spark.createDataFrame([("u1", "a.test"), ("u2", "a.test")], "url string, host string")
+    dirty1 = update_and_save_shards(one, p1, None, 4, 1 << 14, n_hashes=5)
+    bs = BloomShards.load_dir(p1)
+    assert bs.m == 1 << 14 and bs.k == 5 and bs.num_shards == 4
+    (s1,) = dirty1
+    assert bs.might_contain(np.array([s1, s1]), pd.Series(["u1", "u2"])).all()
+    assert not bs.bits[[s for s in range(4) if s != s1]].any()  # clean: zeros
 
-    bs.add(2, pd.Series(["u3"]))
+    two = spark.createDataFrame([("u3", "b.test")], "url string, host string")
     p2 = str(tmp_path / "v1")
-    bs.save_dir(p2, prev_path=p1, dirty_shards={2})
-    assert (BloomShards.load_dir(p2).bits == bs.bits).all()
+    (s2,) = update_and_save_shards(two, p2, p1, 4, 1 << 14, n_hashes=5)
+    bs2 = BloomShards.load_dir(p2)
+    assert bs2.might_contain(np.array([s1, s1, s2]), pd.Series(["u1", "u2", "u3"])).all()
     ino = lambda p, s: os.stat(os.path.join(p, f"shard_{s:05d}.npy")).st_ino
-    assert ino(p2, 0) == ino(p1, 0) and ino(p2, 1) == ino(p1, 1)  # clean: linked
-    assert ino(p2, 2) != ino(p1, 2)  # dirty: rewritten
+    for s in range(4):
+        if s != s2:
+            assert ino(p2, s) == ino(p1, s)  # clean: linked
+    assert ino(p2, s2) != ino(p1, s2)  # dirty: rewritten
 
 
 def test_shard_local_probe_equals_broadcast(spark, tmp_path):
-    bs = BloomShards(8, bits_per_shard=1 << 16)
-    df = spark.createDataFrame(
-        [(f"http://h{i%11}.test/p{i}", f"h{i%11}.test") for i in range(500)],
-        "url string, host string",
-    )
-    bs.update_from_df(df)
+    df = _urls(spark, "p")
     bdir = str(tmp_path / "bloomdir")
-    bs.save_dir(bdir)
-    mixed = df.union(
-        spark.createDataFrame(
-            [(f"http://h{i%11}.test/NEW{i}", f"h{i%11}.test") for i in range(500)],
-            "url string, host string",
-        )
-    )
+    update_and_save_shards(df, bdir, None, 8, 1 << 16)
+    bs = BloomShards.load_dir(bdir)
+    mixed = df.union(_urls(spark, "NEW"))
     via_bc = {
         (r["url"], r["maybe_seen"])
         for r in with_bloom_maybe_seen(spark, mixed, bs).collect()

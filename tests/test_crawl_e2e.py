@@ -185,7 +185,7 @@ def test_crash_between_write_and_commit_is_recovered(spark, tmp_path, tiny_web):
     # point at them (url_seen garbage + a leftover frontier dir)
     store = crashed.store
     garbage = store.read("frontier").limit(1).withColumn("bucket", F.lit(0))
-    store.write_version_bucketed("url_seen", garbage, [0])
+    store.write_version_bucketed("url_seen", garbage)
     store.write_version("frontier", store.read("frontier").limit(2))
     assert store.last_round() == 1  # snapshot still the completed round
 
@@ -204,6 +204,70 @@ def test_crash_between_write_and_commit_is_recovered(spark, tmp_path, tiny_web):
         return seen, log
 
     assert snap(resumed) == snap(straight)
+
+
+def test_persist_failure_waits_for_writers_and_resumes(
+    spark, tmp_path, tiny_web, monkeypatch
+):
+    """A write that fails inside the threaded persist fan-out fails the
+    round before its commit, after every sibling writer has finished;
+    re-running the round on the same engine converges to the straight
+    run."""
+    import threading
+    import time
+
+    from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
+
+    cfg = CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8)
+    straight = CrawlEngine(spark, tiny_web, str(tmp_path / "s1"), cfg)
+    straight.run(3)
+
+    eng = CrawlEngine(spark, tiny_web, str(tmp_path / "s2"), cfg)
+    eng.run(1)  # round 0 writes the bases; round 1 appends deltas
+    store = eng.store
+    in_flight, failing = [0], [True]
+    lock = threading.Lock()
+
+    def track(name):
+        write = getattr(store, name)
+
+        def tracked(table, *args):
+            with lock:
+                in_flight[0] += 1
+            try:
+                if failing[0] and name == "write_version_delta" and table == "host_stats":
+                    raise RuntimeError("injected host_stats write failure")
+                if failing[0] and table == "frontier":
+                    time.sleep(2)  # a sibling writer still busy at the failure
+                return write(table, *args)
+            finally:
+                with lock:
+                    in_flight[0] -= 1
+
+        monkeypatch.setattr(store, name, tracked)
+
+    for name in ("write_version", "write_version_delta", "write_version_bucketed", "append_round"):
+        track(name)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run_round()
+    assert in_flight[0] == 0, "a persist writer outlived the failed round"
+    assert store.last_round() == 0
+    failing[0] = False
+
+    eng.run(2)  # resume in-process: rounds 1 and 2
+
+    def snap(e):
+        seen = {
+            (r["url"], r["last_hash"], r["refresh_rate"], r["depth"])
+            for r in e.store.read("url_seen").collect()
+        }
+        log = {
+            (r["round"], r["url"], r["status"], r["image_id"], r["phash"])
+            for r in e.store.read_appended("crawl_log").collect()
+        }
+        return seen, log
+
+    assert snap(eng) == snap(straight)
 
 
 def test_markup_extraction_equals_outlink_join(spark, tmp_path, tiny_web):

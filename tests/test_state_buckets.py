@@ -1,7 +1,6 @@
-"""Incremental bucketed url_seen state: a round must rewrite only the
-host-buckets that contain updates; untouched buckets are hard-linked
-byte-identically into the new version (the parquet stand-in for an
-Iceberg MERGE snapshot referencing unchanged data files)."""
+"""Host-bucketed state: every per-host state table stores
+pmod(xxhash64(host), state_buckets) under a modulus pinned in the
+manifest, and the bucket count is a physical layout knob only."""
 
 import os
 import sys
@@ -11,103 +10,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine  # noqa: E402
-from artemis_spark.sources.state import StateStore  # noqa: E402
-
-
-def _bucket_inodes(vdir: str) -> dict[int, set[tuple[str, int]]]:
-    out = {}
-    for d in os.listdir(vdir):
-        if d.startswith("bucket="):
-            k = int(d.split("=", 1)[1])
-            out[k] = {
-                (f, os.stat(os.path.join(vdir, d, f)).st_ino)
-                for f in os.listdir(os.path.join(vdir, d))
-                if f.endswith(".parquet")
-            }
-    return out
-
-
-def test_write_version_bucketed_links_clean_buckets(spark, tmp_path):
-    store = StateStore(spark, str(tmp_path / "st"))
-    full = spark.createDataFrame(
-        [(f"u{i}", i % 3) for i in range(30)], "url: string, bucket: int"
-    )
-    v1 = store.write_version_bucketed("t", full, dirty_buckets=[0, 1, 2])
-    store.commit(0, {"t": v1})
-    dirty = spark.createDataFrame([("u-new", 1)], "url: string, bucket: int")
-    v2 = store.write_version_bucketed("t", dirty, dirty_buckets=[1])
-    store.commit(1, {"t": v2})
-
-    b1 = _bucket_inodes(store._vdir("t", v1))
-    b2 = _bucket_inodes(store._vdir("t", v2))
-    assert b2[0] == b1[0] and b2[2] == b1[2], "clean buckets must be hard links"
-    assert b2[1] != b1[1], "dirty bucket must be rewritten"
-    # the new version reads as the merged table
-    got = {r["url"] for r in store.read("t").collect()}
-    assert got == {f"u{i}" for i in range(30) if i % 3 != 1} | {"u-new"}
-    # vacuuming the superseded version must not break the links
-    store.vacuum(keep_last=1)
-    assert not os.path.exists(store._vdir("t", v1))
-    assert store.read("t").count() == 21
-
-
-def test_untouched_buckets_hardlinked_in_crawl(spark, tmp_path, tiny_web):
-    """Integration: once early hosts are exhausted, later rounds carry
-    their buckets over as hard links instead of rewriting them."""
-    eng = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "state"),
-        # delta chain off: this test pins the bucketed-rewrite layout
-        # (hard-linked clean buckets); the delta layout has its own tests
-        CrawlConfig(politeness_budget=25, num_partitions=4, bloom_shards=8,
-                    state_buckets=256, state_delta_max_chain=0),
-    )
-    eng.run(6)
-    root = os.path.join(str(tmp_path / "state"), "url_seen")
-    versions = sorted(int(d[1:]) for d in os.listdir(root) if d.startswith("v"))
-    assert len(versions) >= 2
-    prev = _bucket_inodes(os.path.join(root, f"v{versions[-2]}"))
-    last = _bucket_inodes(os.path.join(root, f"v{versions[-1]}"))
-    linked = [k for k in last if k in prev and last[k] == prev[k]]
-    assert linked, (
-        f"no hard-linked clean buckets between v{versions[-2]} and "
-        f"v{versions[-1]} (prev={sorted(prev)}, last={sorted(last)})"
-    )
-
-    # the bucketed state remains a consistent url_seen table: unique keys,
-    # stored bucket equals the host-hash bucket
-    df = eng.store.read("url_seen")
-    assert df.count() == df.select("url").distinct().count()
-    bad = df.filter(
-        F.col("bucket") != F.pmod(F.xxhash64("host"), F.lit(256)).cast("int")
-    ).count()
-    assert bad == 0
-
-
-def test_resume_from_legacy_flat_state_keeps_all_rows(spark, tmp_path, tiny_web):
-    """A pre-bucketing state dir stores url_seen as flat files (no bucket=
-    dirs).  Resuming must migrate it with a one-round full rewrite — not
-    hard-link nothing and silently drop every clean-bucket row."""
-    cfg = CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8)
-    state = str(tmp_path / "state")
-    eng = CrawlEngine(spark, tiny_web, state, cfg)
-    eng.run(2)
-
-    # rewrite the committed url_seen version in the legacy flat layout
-    store = eng.store
-    seen = store.read("url_seen").drop("bucket").collect()
-    v = store.write_version(
-        "url_seen", spark.createDataFrame(seen, store.read("url_seen").drop("bucket").schema)
-    )
-    store.commit(store.last_round(), {"url_seen": v})
-    before = {r["url"] for r in seen}
-
-    resumed = CrawlEngine(spark, tiny_web, state, cfg)
-    resumed.run(1)
-    after_df = resumed.store.read("url_seen")
-    after = {r["url"] for r in after_df.collect()}
-    assert before <= after, f"legacy rows lost on resume: {sorted(before - after)[:5]}"
-    assert after_df.count() == after_df.select("url").distinct().count()
-    assert "bucket" in after_df.columns  # migrated to the bucketed layout
 
 
 def test_resume_with_different_state_buckets_uses_pinned_modulus(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -100,8 +101,8 @@ def pair_run_record(seq: int, cpus: int, tier: str, rounds: int, budget: int) ->
 
 
 def median_of(rs: list, key: str):
-    vals = sorted(x[key] for x in rs if x.get(key))
-    return vals[len(vals) // 2] if vals else None
+    vals = [x[key] for x in rs if x.get(key)]
+    return statistics.median(vals) if vals else None
 
 
 def pair_summary(runs: list[dict]) -> dict:
@@ -112,8 +113,6 @@ def pair_summary(runs: list[dict]) -> dict:
     middle).  Marks the summary partial when the levels are unbalanced,
     because ABBA drift-cancellation needs a balanced order.
     """
-    import statistics
-
     levels = sorted({r["cpus"] for r in runs})
     if len(levels) != 2:
         raise ValueError(f"summary needs exactly two levels, found {levels}")

@@ -44,9 +44,10 @@ lineage.  The work grows with pipeline depth, so every feature added
 since r01 (auth, forms, delta-log, bloom shards) made every OTHER
 action slower: the r01→r03 driver-tier regression.
 
-Fix: `CrawlConfig.plan_pin` replaces the hot cache() calls with
-`localCheckpoint(eager=False)`, which truncates lineage at each
-materialized intermediate — downstream plans see a leaf RDD scan.
+Fix: the round's pins (`_Round.pin` in plans/crawl.py) use
+`localCheckpoint(eager=False)` instead of cache(), which truncates
+lineage at each materialized intermediate — downstream plans see a
+leaf RDD scan.
 Losing recompute lineage is safe by design: the committed state store
 is the crash-recovery mechanism (rounds are resumable), not Spark
 recompute.  On a real cluster use `reliableCheckpoint` off the hot
@@ -69,7 +70,7 @@ generates ~340 classes; the codegen cache is a 100-entry LRU
 recompiles EVERY class (~2-3s serial driver time).  With the cache
 sized to hold a full round (4096), steady-state rounds compile only
 the ~90 classes whose generated source embeds round-varying primitive
-literals (round number, epoch timestamps, dirty-bucket isin lists —
+literals (round number, epoch timestamps, wave-bucket isin lists —
 primitives inline into the source text; strings/arrays go to the
 references array and do not)."""
 
@@ -192,14 +193,15 @@ def main() -> None:
         plan_of(ex_df),
     ))
 
-    # 4. bucketed url_seen dirty scan — partition pruning on bucket
+    # 4. bucketed url_seen base scan — partition pruning on bucket
     eng.run(1)
     seen = eng.store.read("url_seen")
     sections.append((
-        "url_seen dirty-bucket scan — MUST show PartitionFilters on the "
-        "bucket partition column (the incremental MERGE reads only dirty "
-        "buckets; clean buckets are hard-linked, never scanned or "
-        "rewritten).",
+        "url_seen bucketed-base scan — MUST show PartitionFilters on the "
+        "bucket partition column: round 0 and every compaction write the "
+        "delta chain's base partitioned by bucket (the _read_chain reduce "
+        "over the chain plus the round's rows), so a bucket predicate "
+        "reads only those buckets' directories.",
         plan_of(seen.filter(F.col("bucket").isin(3, 7))),
     ))
 

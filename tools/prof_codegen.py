@@ -17,8 +17,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("ARTEMIS_ROUND_TIMING", "1")
-
 
 def main() -> None:
     import bench as B
