@@ -155,21 +155,25 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded LSH: docs sharing any band bucket become a candidate pair.
 
-    Output: (doc1, doc2) distinct, doc1 < doc2.  At scale each band is
-    one shuffle on the band-bucket key; hot buckets are bounded because
-    signatures within a band concatenate rows_per_band minhashes.
+    Output: (doc1, doc2) distinct, doc1 < doc2.  Each signature row
+    explodes into one bucket per band, tagged with the band index so
+    equal minhashes of different bands never collide; ONE self-join on
+    that bucket (one shuffle) yields every band's pairs.  The explode
+    reads all k minhashes, so the signature aggregate runs once (per-band
+    joins let column pruning split it into one shingle re-aggregation
+    per band).  Hot buckets stay bounded: a bucket holds k/bands hashes.
     """
-    rows_per_band = k // bands
-    out = None
-    for bidx in range(bands):
-        cols = [f"mh{bidx * rows_per_band + j}" for j in range(rows_per_band)]
-        bucket = F.concat_ws("_", *[F.col(c).cast("string") for c in cols])
-        banded = sig.select(F.col(id_col), bucket.alias("bucket"))
-        a = banded.select(F.col(id_col).alias("doc1"), "bucket")
-        b = banded.select(F.col(id_col).alias("doc2"), "bucket")
-        pairs = a.join(b, "bucket").where(F.col("doc1") < F.col("doc2")).select("doc1", "doc2")
-        out = pairs if out is None else out.unionByName(pairs)
-    return out.distinct()
+    if k % bands:
+        raise ValueError(f"k={k} minhashes do not split into {bands} equal bands")
+    r = k // bands
+    buckets = F.array(*[
+        F.concat_ws("_", F.lit(str(b)), *[F.col(f"mh{b * r + j}").cast("string") for j in range(r)])
+        for b in range(bands)
+    ])
+    banded = sig.select(F.col(id_col), F.explode(buckets).alias("bucket"))
+    a = banded.select(F.col(id_col).alias("doc1"), "bucket")
+    b = banded.select(F.col(id_col).alias("doc2"), "bucket")
+    return a.join(b, "bucket").where(F.col("doc1") < F.col("doc2")).select("doc1", "doc2").distinct()
 
 
 def minhash_lsh_dedup_pairs(
@@ -215,11 +219,13 @@ def minhash_lsh_dedup_pairs(
 
 
 def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """64-bit SimHash over word hashes: bit j of the output is 1 iff the
-    sum over distinct words of (2*bit_j(hash(word)) - 1) is positive.
+    """63-bit (non-negative in both engines) SimHash over word hashes: bit
+    j is 1 iff the sum over distinct words of (2*bit_j(hash(w)) - 1) > 0.
 
-    Fully JVM-side: one explode + 64 conditional sums (one shuffle).
-    Output: (id, simhash:long).
+    Fully JVM-side: one explode + one hash aggregate (one shuffle).  The
+    63 conditional sums and their recomposition are one SQL expression,
+    the statement the DuckDB oracle runs, parsed in one call instead of
+    built as ~900 Column nodes.  Output: (id, simhash:long).
     """
     words = (
         _spread(df)
@@ -228,15 +234,9 @@ def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         .distinct()
         .withColumn("h", md5_hash64(F.col("w")))
     )
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{j}")
-        for j in range(63)  # 63 bits: keeps the result non-negative in both engines
-    ]
-    summed = words.groupBy(id_col).agg(*aggs)
-    sim = None
-    for j in range(63):
-        bit = F.when(F.col(f"b{j}") > 0, F.lit(2 ** j).cast("long")).otherwise(F.lit(0).cast("long"))
-        sim = bit if sim is None else (sim + bit)
-    return summed.select(F.col(id_col), sim.alias("simhash"))
+    fold = " + ".join(
+        f"(CASE WHEN sum(CASE WHEN (shiftright(h, {j}) & 1) = 1 THEN 1 ELSE -1 END) > 0 "
+        f"THEN {2 ** j}L ELSE 0L END)"
+        for j in range(63)
+    )
+    return words.groupBy(id_col).agg(F.expr(fold).alias("simhash"))

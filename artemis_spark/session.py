@@ -47,12 +47,13 @@ def engine_conf(n_shuffle: int) -> dict[str, str]:
         # whole-stage codegen instead of silently falling back to
         # interpreted eval when a generated method passes 8KB
         "spark.sql.codegen.hugeMethodLimit": "65535",
-        # A crawl round runs ~46 jobs that generate ~340 codegen classes;
-        # the default 100-entry Janino LRU therefore thrashes and every
+        # A crawl round runs ~55-70 jobs, and round 0 compiles ~300
+        # codegen classes (perfbench recrawl workload, 4 cores); the
+        # default 100-entry Janino LRU therefore thrashes and every
         # task of every later stage recompiles its generated code
         # (compile happens at cache-miss inside the task, not only on the
         # driver).  Size the cache to hold several full rounds so
-        # steady-state rounds recompile only the ~90 classes whose source
+        # steady-state rounds recompile only the 65-80 classes whose source
         # embeds round-varying primitive literals.  Same-window A/B
         # (tools/knob_matrix.py): median-round 13.2k -> 22.0k URLs/s.
         # Static conf: must be set before the first session is built.

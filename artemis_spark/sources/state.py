@@ -129,12 +129,20 @@ class StateStore:
         """The chain members that hold parquet files (see read())."""
         return [v for v in chain if self._has_files(self._vdir(table, v))]
 
+    def _scan(self, path: str, schema: T.StructType | None) -> DataFrame:
+        """One version dir.  A given schema skips parquet schema
+        inference, which is one Spark job per directory opened."""
+        reader = self.spark.read
+        return (reader if schema is None else reader.schema(schema)).parquet(path)
+
     def read(self, table: str, schema=None) -> DataFrame | None:
+        if schema is not None and table in DELTA_KEYS:
+            schema = with_bucket(schema)
         chain = self.delta_chain(table)
         if len(chain) > 1:
             live = self._live(table, chain)
             if live:
-                return self._read_chain(table, live)
+                return self._read_chain(table, live, schema=schema)
             # fall through: an entirely-empty chain behaves like an
             # empty table (schema-typed below)
         v = self.current_version(table)
@@ -147,10 +155,14 @@ class StateStore:
         # no parquet files — schema inference would fail on it
         if schema is not None and not self._has_files(path):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+        return self._scan(path, schema)
 
     def _read_chain(
-        self, table: str, chain: list[int], tail: DataFrame | None = None
+        self,
+        table: str,
+        chain: list[int],
+        tail: DataFrame | None = None,
+        schema: T.StructType | None = None,
     ) -> DataFrame:
         """Merge-on-read for a delta-layout table: base + deltas unioned
         with a chain sequence number, then reduced per key by the
@@ -161,9 +173,10 @@ class StateStore:
         (functionally dependent on the key's host), so bucket predicates
         above this read still prune the scan.  This is the read-side
         cost of O(|updates|)-per-round writes; compaction bounds the
-        chain length."""
+        chain length.  ``schema`` (with ``bucket``) types every member's
+        scan instead of inferring it."""
         key = DELTA_KEYS[table]
-        dfs = [self.spark.read.parquet(self._vdir(table, v)) for v in chain]
+        dfs = [self._scan(self._vdir(table, v), schema) for v in chain]
         if tail is not None:
             dfs.append(tail)
         u = dfs[0].withColumn("_seq", F.lit(0))
@@ -317,6 +330,13 @@ class StateStore:
                     shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
 
 
+def with_bucket(schema: T.StructType) -> T.StructType:
+    """A delta table's stored schema: its row schema plus ``bucket``."""
+    if "bucket" in schema.fieldNames():
+        return schema
+    return T.StructType(schema.fields + [T.StructField("bucket", T.IntegerType(), True)])
+
+
 def bucket_of(host: Column, n_buckets: int) -> Column:
     """The state bucket of a host: pmod(xxhash64(host), n_buckets)."""
     return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
@@ -351,9 +371,7 @@ class DeltaTable:
     ):
         self.store = store
         self.name = name
-        self.schema = T.StructType(
-            schema.fields + [T.StructField("bucket", T.IntegerType(), True)]
-        )
+        self.schema = with_bucket(schema)
         self.n_buckets = n_buckets
         self.max_chain = max_chain
         self.base_parts = base_parts
@@ -386,7 +404,7 @@ class DeltaTable:
             v = self.store.write_version_delta(self.name, rows)
             return v, chain + [v]
         live = self.store._live(self.name, chain)
-        merged = self.store._read_chain(self.name, live, tail=rows)
+        merged = self.store._read_chain(self.name, live, tail=rows, schema=self.schema)
         v = self.store.write_version_bucketed(
             self.name, merged.repartition(self.base_parts, "bucket")
         )

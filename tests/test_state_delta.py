@@ -187,3 +187,30 @@ def test_robots_and_host_stats_link_clean_buckets(spark, tmp_path, tiny_web):
         assert bad == 0
     hs = eng.store.read("host_stats")
     assert hs.count() == hs.select("host").distinct().count()
+
+
+def test_state_reads_launch_no_jobs(spark, tmp_path, tiny_web):
+    """Opening the store's tables is planning only: a typed read never
+    runs parquet schema inference (one Spark job per version dir), so a
+    round's state reads cost no jobs however long the chain grows."""
+    from artemis_spark.plans.crawl import CANDIDATES_SCHEMA
+    from artemis_spark.schemas import URL_SEEN_SCHEMA
+
+    eng = CrawlEngine(
+        spark, tiny_web, str(tmp_path / "state"),
+        _cfg(revisit_delay_rounds=1, state_delta_max_chain=4),
+    )
+    eng.run(3)
+    assert len(eng.store.delta_chain("url_seen")) >= 2
+    sc = spark.sparkContext
+    sc.setJobGroup("state_reads_probe", "typed state reads")
+    try:
+        seen = eng.store.read("url_seen", URL_SEEN_SCHEMA)
+        frontier = eng.store.read("frontier", CANDIDATES_SCHEMA)
+        jobs = sc.statusTracker().getJobIdsForGroup("state_reads_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], f"opening the state ran {len(jobs)} job(s)"
+    assert "bucket" in seen.columns
+    assert seen.count() == seen.select("url").distinct().count() > 0
+    assert frontier.columns == CANDIDATES_SCHEMA.fieldNames()

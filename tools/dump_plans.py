@@ -32,6 +32,24 @@ def plan_of(df) -> str:
     return tree + "\n-- scan/exchange details --\n" + details
 
 
+def final_plan(df) -> tuple[str, dict[int, str]]:
+    """The executed (AQE final) plan of an already-run ``df``: the tree,
+    and the detail block of each node in it.  Unlike the initial plan,
+    it shows which shuffles the run reused (ReusedExchange)."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    txt = buf.getvalue()
+    tree = txt[txt.index("== Final Plan =="):txt.index("+- == Initial Plan ==")]
+    ids = {int(i) for i in re.findall(r"\((\d+)\)", tree)}
+    blocks = {
+        int(b[1:b.index(")")]): b
+        for b in txt.split("\n\n")
+        if re.match(r"\(\d+\) ", b) and int(b[1:b.index(")")]) in ids
+    }
+    return tree.rstrip(), blocks
+
+
 PIN_NOTE = """\
 Symptom (profiled at the bench tier, 32 cores): executor utilization
 12-15/32 with 17-38s per round of ZERO-job driver dead time.  Cause:
@@ -64,12 +82,13 @@ auth_deferred / scheduled / deferred) must filter a SHARED pin: a
 branch with its own pin re-executes the whole unpinned chain at its
 creation point (the r1-r4 engine paid that 4x per round).
 
-Second serialized driver cost: Janino codegen compilation.  A round
-generates ~340 classes; the codegen cache is a 100-entry LRU
-(static conf `spark.sql.codegen.cache.maxEntries`), so EVERY round
-recompiles EVERY class (~2-3s serial driver time).  With the cache
-sized to hold a full round (4096), steady-state rounds compile only
-the ~90 classes whose generated source embeds round-varying primitive
+Second serialized driver cost: Janino codegen compilation.  Round 0
+compiles ~300 classes (perfbench recrawl workload, 4 cores); with the
+default 100-entry codegen cache (static conf
+`spark.sql.codegen.cache.maxEntries`) EVERY round recompiles EVERY
+class (~2-3s serial driver time).  With the cache sized to hold
+several rounds (4096), steady-state rounds compile only the 65-80
+classes whose generated source embeds round-varying primitive
 literals (round number, epoch timestamps, wave-bucket isin lists —
 primitives inline into the source text; strings/arrays go to the
 references array and do not)."""
@@ -275,12 +294,38 @@ def main() -> None:
     ]:
         sections.append((f"`{name}` — {why}", plan_of(E.queries()[name](spark, sf))))
 
+    # 9. MinHash-LSH candidate generation, from the executed plan
+    mh = E.queries()["minhash_lsh_pairs"](spark, sf)
+    mh.collect()
+    tree, nodes = final_plan(mh)
+    sig_aggs = [n for n, b in nodes.items() if "partial_min(" in b]
+    bucket_joins = [n for n, b in nodes.items() if re.search(r"Left keys \[1\]: \[bucket#", b)]
+    if len(sig_aggs) != 1 or len(bucket_joins) != 1:
+        raise SystemExit(
+            f"minhash_lsh_pairs: {len(sig_aggs)} signature aggregates, "
+            f"{len(bucket_joins)} bucket joins (want 1 and 1)"
+        )
+    details = "\n".join(
+        line[:200] for n in sig_aggs + bucket_joins for line in nodes[n].splitlines()
+        if not line.startswith(("Input", "Output", "Aggregate Attributes", "Results"))
+    )
+    sections.append((
+        "`minhash_lsh_pairs` (executed plan) — MUST run exactly ONE "
+        "signature HashAggregate over the shingles (the partial_min over "
+        "all k hashes) and ONE self-join on the band-tagged bucket; the "
+        "join's other side reads the signature shuffle as a "
+        "ReusedExchange, and no band re-aggregates the shingles (per-band "
+        "joins let column pruning split the signature into one 2-hash "
+        "aggregate per band, each re-exploding the shingles).",
+        tree + "\n-- signature aggregate and bucket join --\n" + details,
+    ))
+
     # static (non-plan) design-note sections — carried here so a
     # regeneration never drops them (the BENCH.md overwrite lesson, r03)
     sections.append((
         "Round-plan pinning — the driver, not the executors, is the "
         "scale axis that breaks first on a long-lived crawl; each "
-        "round's ~46 actions MUST see O(1)-size plans, not the round's "
+        "round's ~55-70 jobs MUST see O(1)-size plans, not the round's "
         "full operator tree.",
         PIN_NOTE,
     ))
