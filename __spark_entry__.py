@@ -1064,7 +1064,9 @@ def _minhash_oracle_sql(k: int = 8, bands: int = 4, num: int = 1, den: int = 5) 
     for bidx in range(bands):
         cols = [f"mh{bidx * rows_per_band + j}" for j in range(rows_per_band)]
         bucket = " || '_' || ".join(f"{c}::VARCHAR" for c in cols)
-        band_selects.append(f"SELECT doc_id, {bucket} AS bucket FROM sig")
+        # band-tagged like the Spark side: equal values in different
+        # bands are not an LSH collision
+        band_selects.append(f"SELECT doc_id, '{bidx}:' || {bucket} AS bucket FROM sig")
     bands_sql = " UNION ALL ".join(band_selects)
     cand_cte = f"""
 , hashed AS (

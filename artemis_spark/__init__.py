@@ -10,12 +10,12 @@ crawl round is one Catalyst DAG over DataFrames:
     frontier candidates
       -> canonicalize            (functions.urls)
       -> policy filters          (operators.robots / rules)
-      -> bloom pre-filter        (operators.bloom, per-partition shards)
+      -> bloom pre-filter        (operators.bloom, shard-local probe)
       -> exact anti-join dedup   (operators.dedup vs url_seen state)
       -> score + politeness topk (operators.politeness)
       -> salted fetch wave       (sources.fetch, synthetic in-sandbox)
       -> decode/validate payloads(functions.images, pandas UDFs)
-      -> extract outlinks        (link_graph join + explode)
+      -> extract outlinks        (functions.markup over the page bytes)
       -> MERGE url_seen, append crawl_log/metrics (sources.state)
 
 See SURVEY.md for the operator-by-operator mapping with reference

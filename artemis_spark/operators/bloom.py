@@ -6,8 +6,8 @@ that short-circuits most duplicate URLs before they reach the master's
 exact check (/root/reference/src/Master.py:284-314).  Here the same
 two-tier shape is: per-host-shard bloom filters (this module, updated
 *incrementally* per round per north_rule inside one executor task per
-shard, broadcast to executors for the probe) followed by the exact
-anti-join in operators/dedup.py.
+shard, probed shard-locally) followed by the exact anti-join in
+operators/dedup.py.
 
 Direction of the short-circuit: a bloom *negative* is definitely-new —
 those rows skip the expensive shuffle anti-join entirely (in an
@@ -16,16 +16,17 @@ plus ~1% false positives) go through the exact join, so results are
 exact regardless of FP rate.
 
 Scale notes (10^10 URLs): with S=4096 shards and ~10 bits/URL each
-shard is ~3 GB total / S ≈ 3 MB — the full dict broadcast is ~12 GB,
-too big for one executor.  The scale path is implemented in
+shard is ~3 GB total / S ≈ 3 MB — a broadcast of every shard is
+~12 GB, too big for one executor.  The round's only probe is therefore
 :func:`with_bloom_maybe_seen_shard_local`: candidates are repartitioned
 by shard id and each task lazily loads ONLY the shard files present in
 its partition (typically one), so per-task memory is O(m/8) regardless
-of S.  Shards are persisted one file per shard with hard-link reuse for
-shards untouched in a round (:func:`update_and_save_shards`), an
-incremental snapshot like the delta-log state tables.  The broadcast probe remains the
-default at sandbox scale (64 x 128 KB) where one task per shard would
-cost more in scheduling than it saves.
+of S and the driver never holds a bitset.  Shards are persisted one
+file per shard with hard-link reuse for shards untouched in a round
+(:func:`update_and_save_shards`), an incremental snapshot like the
+delta-log state tables.  :func:`with_bloom_maybe_seen` (whole-bitset
+broadcast) is kept as the reference the shard-local probe is tested
+against and for isolated probe measurements; the round never calls it.
 """
 
 from __future__ import annotations
@@ -130,6 +131,14 @@ def update_and_save_shards(
     files that the driver's commit then references.
 
     Returns the dirty shard ids (for tests/telemetry).
+
+    Precondition: ``out_dir`` and ``prev_dir`` lie on a filesystem that
+    the driver and every executor see at the same path (local disk under
+    ``local[*]``; a shared mount such as NFS/FUSE-backed object storage
+    on a cluster).  The executor tasks here read the previous shard and
+    write the new one by path, the driver hard-links the clean shards
+    and renames the directory, and the round's probe tasks
+    (:func:`with_bloom_maybe_seen_shard_local`) read shard files by path.
     """
     m, k = int(bits_per_shard), int(n_hashes)
     tmp = out_dir + ".tmp"
@@ -206,10 +215,17 @@ def with_bloom_maybe_seen(
     Rows with ``maybe_seen = false`` are guaranteed-new and can bypass
     the exact anti-join shuffle (dedup.py consumes this flag).
 
+    Not the round's probe (that is
+    :func:`with_bloom_maybe_seen_shard_local`): this whole-bitset
+    broadcast is kept as the reference the shard-local probe is tested
+    against (``tests/test_bloom.py``) and as the isolated bloom layer of
+    the benchmark's traced run (``perfbench/crawlbench.py``), which
+    probes ``CrawlEngine.bloom`` through it.
+
     ``bc_registry``: optional list the created Broadcast handle is
-    appended to, so a long-running caller (the round loop) can
-    ``destroy()`` it once the round's plans have materialized — without
-    it each round leaks one S*m/8 broadcast in driver+executor memory.
+    appended to, so the caller can ``destroy()`` it once the plans
+    using it have materialized — without it each call leaks one S*m/8
+    broadcast in driver+executor memory.
     """
     S = shards.num_shards
     bc = spark.sparkContext.broadcast({"bits": shards.bits, "m": shards.m, "k": shards.k})
@@ -247,7 +263,9 @@ def with_bloom_maybe_seen_shard_local(
     per-task load is the same read Iceberg does for a metadata file.
 
     Output is identical to :func:`with_bloom_maybe_seen` over the same
-    saved shards (asserted by the crawl invariance test).
+    saved shards (``tests/test_bloom.py``).  The repartition by shard id
+    drops the candidates' host partitioning: consumers keyed by host
+    plan their own exchange.
     """
     meta = BloomShards.dir_meta(bloom_dir)
     S, m, k = meta["num_shards"], meta["m"], meta["k"]

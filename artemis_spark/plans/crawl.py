@@ -39,11 +39,7 @@ from ..functions.urls import (
     resolve_url,
     scheme_of,
 )
-from ..operators.bloom import (
-    BloomShards,
-    with_bloom_maybe_seen,
-    with_bloom_maybe_seen_shard_local,
-)
+from ..operators.bloom import BloomShards, with_bloom_maybe_seen_shard_local
 from ..operators.dedup import (
     as_new,
     bump_refresh_rate,
@@ -57,7 +53,7 @@ from ..operators.robots import apply_robots_flags, sitemap_candidates
 from ..rounds import EPOCH_SQL, ROUND_SECONDS, round_ts
 from ..schemas import MAX_REFRESH_RATE, URL_SEEN_SCHEMA
 from ..sources.fetch import build_payload_cache, build_web, synthetic_fetch
-from ..sources.state import DeltaTable, StateStore, bucket_of
+from ..sources.state import DeltaTable, StateStore
 from .. import schemas as S
 
 ROBOTS_BLOCKED_STATUS = 999  # crawl_log marker for robots-rejected URLs
@@ -95,10 +91,6 @@ class CrawlConfig:
     allowed_fmts: tuple[str, ...] = ("png", "jpeg")  # F6 content-type gate
     bloom_bits_per_shard: int = 1 << 20
     bloom_shards: int = 64
-    # Scale-path probe: repartition candidates by shard id, each task loads
-    # only its shard file (no S*m/8 broadcast).  Default False: at sandbox
-    # shard sizes the broadcast is cheaper; at 4096x3MB it is mandatory.
-    bloom_shard_local: bool = False
     # Every per-host state table (url_seen, host_stats, robots_cache) is
     # stored under pmod(xxhash64(host), state_buckets): compacted bases
     # are partitioned by it, so wave-sliced reads prune whole buckets.
@@ -112,10 +104,6 @@ class CrawlConfig:
     # to bound read amplification.  <= 1 compacts every round.
     state_delta_max_chain: int = 8
     decode_payloads: bool = True  # disable for pure scheduler benchmarks
-    # T2/T3: extract outlinks from the fetched page BYTES (html/sitemap
-    # markup grammar, functions/markup.py) when the web fixture carries
-    # bodies; False falls back to the link_graph.outlinks join.
-    extract_markup: bool = True
     # salt>0 shapes the wave for a real per-host HTTP fetcher; the
     # synthetic join path leaves it 0 (the join partitions by url).
     fetch_salt: int = 0
@@ -204,14 +192,11 @@ class _Round:
         self.pins.append(p)
         return p
 
-    def release(self, broadcasts: list) -> None:
-        """Unpersist every pin and destroy the round's bloom broadcasts:
-        every plan referencing them has materialized (or the round
-        failed), so otherwise each round leaks one bitset copy."""
+    def release(self) -> None:
+        """Unpersist every pin: every plan referencing them has
+        materialized (or the round failed)."""
         while self.pins:
             self.pins.pop().unpersist()
-        while broadcasts:
-            broadcasts.pop().destroy()
 
 
 class CrawlEngine:
@@ -227,26 +212,23 @@ class CrawlEngine:
         self.web_dir = web_dir
         self.cfg = config or CrawlConfig()
         self.seeds_path = seeds_path or f"{web_dir}/seeds.parquet"
-        self.store = StateStore(spark, state_dir)
         self.link_graph = spark.read.parquet(f"{web_dir}/link_graph.parquet")
+        # T2/T3 links come from the fetched page bytes: a web without
+        # page bodies cannot be crawled, so refuse it before any state
+        if "body" not in self.link_graph.columns:
+            raise ValueError(
+                f"{web_dir}/link_graph.parquet has no 'body' column: "
+                "outlinks are extracted from the page bytes"
+            )
+        self.store = StateStore(spark, state_dir)
         self.payloads = spark.read.parquet(f"{web_dir}/payloads.parquet")
         # Two caches, not one pre-joined table: pages hash-partitioned by
-        # host (co-located with the wave — per-round fetch joins are
-        # exchange-free) and payload bytes hash-partitioned by image_id
+        # host (per-round fetch joins never exchange the page side, only
+        # the wave) and payload bytes hash-partitioned by image_id
         # (bytes attach per round only for fetched rows; pre-joining them
         # would replicate each shared image ~10x into a multi-GB cache).
         # On a cluster the same effect comes from Iceberg bucketed tables.
-        self.has_markup = "body" in self.link_graph.columns
-        self.use_markup = self.cfg.extract_markup and self.has_markup
-        self.web = build_web(
-            self.link_graph,
-            self.cfg.num_partitions,
-            # body and outlinks carry the same links twice; cache only the
-            # one the configured extraction path (T2/T3) actually reads
-            include_outlinks=not self.use_markup,
-            include_body=self.use_markup,
-        )
-        self.web = self.web.persist()
+        self.web = build_web(self.link_graph, self.cfg.num_partitions).persist()
         self.payload_cache = build_payload_cache(
             self.payloads, self.cfg.num_partitions
         ).persist()
@@ -333,23 +315,18 @@ class CrawlEngine:
                 "host", "auth", "login", "lifetime_s", *_null_form
             )
         self.seeds = spark.read.parquet(self.seeds_path)
-        self._bloom: BloomShards | None = None
-        self._round_bcs: list = []  # per-round bloom broadcasts, destroyed at round end
 
     def close(self) -> None:
-        """Release session-held resources: the persisted web/payload
-        caches and any live round bloom broadcasts.  Cached plans live in
-        the session's CacheManager until explicitly unpersisted — they do
-        NOT die with the engine object, so a long-lived session running
-        many engines (test suites, notebook reuse) leaks heap without
-        this."""
+        """Release the persisted web/payload caches.  Cached plans live
+        in the session's CacheManager until explicitly unpersisted —
+        they do NOT die with the engine object, so a long-lived session
+        running many engines (test suites, notebook reuse) leaks heap
+        without this."""
         for df in (self.web, self.payload_cache):
             try:
                 df.unpersist()
             except Exception:
                 pass
-        while self._round_bcs:
-            self._round_bcs.pop().destroy()
 
     # ------------------------------------------------------------------ state
 
@@ -358,13 +335,14 @@ class CrawlEngine:
 
     @property
     def bloom(self) -> BloomShards:
-        if self._bloom is None:
-            v = self.store.current_version("bloom")
-            if v >= 0:
-                self._bloom = BloomShards.load_dir(self._bloom_path(v))
-            else:
-                self._bloom = BloomShards(self.cfg.bloom_shards, self.cfg.bloom_bits_per_shard)
-        return self._bloom
+        """The committed bloom version loaded whole on the driver (empty
+        shards before the first one).  The round never reads it — it
+        probes shard-locally — so it is loaded afresh on each access;
+        it serves inspection and the broadcast reference probe."""
+        v = self.store.current_version("bloom")
+        if v >= 0:
+            return BloomShards.load_dir(self._bloom_path(v))
+        return BloomShards(self.cfg.bloom_shards, self.cfg.bloom_bits_per_shard)
 
     def bootstrap(self) -> None:
         """Round -1: frontier v0 = canonicalized seeds (S1,
@@ -447,7 +425,7 @@ class CrawlEngine:
             ).collect()[0]
             n_next = None if self.cfg.light_stats else next_frontier.count()
         finally:
-            rd.release(self._round_bcs)
+            rd.release()
         # return contract: under cfg.light_stats the info-only counters
         # "candidates"/"new_candidates" are None (not 0, not a sentinel
         # int) — consumers aggregating per-round counts must skip None.
@@ -507,9 +485,10 @@ class CrawlEngine:
 
         pre_shuffle = _admit(frontier.unionByName(recrawl_due))
         # THE routing shuffle (reference P2, /root/reference/src/Slave.py:145-172):
-        # one hash exchange by host up front; every downstream join/window/
-        # groupBy on the wave path keys by (host, ...) so Catalyst reuses
-        # this partitioning and plans the rest of the round exchange-free.
+        # one hash exchange by host up front, which the within-batch
+        # dedupe reuses.  Pins do not carry it on: each later host-keyed
+        # consumer of a pin (politeness window, fetch join) re-exchanges
+        # the wave-sized slice it reads (README "Round execution shape").
         candidates = rd.pin(dedupe_within_batch(
             pre_shuffle.repartition(cfg.num_partitions, "host")
         ))
@@ -531,18 +510,17 @@ class CrawlEngine:
         flags — materialized once as the ``gated`` pin; every branch of
         it is a filter scan of that pin."""
         cfg, r, now = self.cfg, rd.r, rd.now
-        # F1 bloom pre-filter -> F4 exact validate
+        # F1 bloom pre-filter -> F4 exact validate.  Before the first
+        # bloom version (round 0) nothing has been seen: bootstrap
+        # commits an empty url_seen, and every later round commits
+        # url_seen and bloom together, so skipping the probe is exact.
         bloom_v = self.store.current_version("bloom")
-        if cfg.bloom_shard_local and bloom_v >= 0:
+        if bloom_v >= 0:
             probed = with_bloom_maybe_seen_shard_local(
                 candidates, self._bloom_path(bloom_v), cfg.num_partitions
             )
         else:
-            # broadcast probe (also round 0, where no per-shard
-            # directory exists yet)
-            probed = with_bloom_maybe_seen(
-                self.spark, candidates, self.bloom, bc_registry=self._round_bcs
-            )
+            probed = candidates.withColumn("maybe_seen", F.lit(False))
         definitely_new, maybe_seen = split_by_bloom(probed)
         schedulable = as_new(definitely_new).unionByName(
             validate_against_seen(maybe_seen, url_seen, r, cfg.revisit_delay_rounds)
@@ -583,7 +561,7 @@ class CrawlEngine:
         # auth_deferred, fetchable — is a filter SCAN of that pin.
         # Previously each branch was its own lazy pin whose first action
         # re-executed the unpinned chain from `candidates`, so the same
-        # O(wave) work (including the Arrow bloom UDF and the validate
+        # O(wave) work (including the bloom probe and the validate
         # join against url_seen) ran up to 4x per round — the dominant
         # share of the r4 "seen_updates materialize" phase.
         live_flagged = decided.join(
@@ -638,7 +616,9 @@ class CrawlEngine:
         cand_hosts = rd.pin(candidates.select("host").distinct())
         wave_buckets = sorted(
             int(x["b"])
-            for x in cand_hosts.select(bucket_of(F.col("host"), rd.n_buckets).alias("b"))
+            for x in cand_hosts.select(
+                host_partition_key(F.col("host"), rd.n_buckets).alias("b")
+            )
             .distinct()
             .collect()
         )
@@ -736,10 +716,11 @@ class CrawlEngine:
             .join(F.broadcast(gate.cand_hosts), "host", "left_semi")
         )
         scored = with_score(gate.fetchable, hs_slice)
-        # one window evaluation (the gated pin preserves the routing
-        # exchange's host partitioning through localCheckpoint, so the
-        # window plans sort-only); scheduled and deferred are filter
-        # scans of the ranked pin
+        # one window evaluation: the gated pin's scan carries no
+        # partitioning (the bloom probe repartitions by shard id, and a
+        # localCheckpoint scan drops it anyway), so the window exchanges
+        # the fetchable slice by host once; scheduled and deferred are
+        # filter scans of the ranked pin
         ranked = rd.pin(politeness_ranked(scored))
         budget = self.cfg.politeness_budget
         return (
@@ -751,9 +732,9 @@ class CrawlEngine:
         """The fetched pin: fetch join, content gates, torrent parse,
         payload decode and markup extraction in one pass."""
         cfg = self.cfg
-        # S2/S3 fetch wave: co-partitioned join against the cached web.
-        # (cfg.fetch_salt shapes a real-HTTP wave; the synthetic join path
-        # keeps host partitioning so the join needs no exchange at all.)
+        # S2/S3 fetch wave: join against the cached web, which is stored
+        # hash(host)-partitioned and sorted, so only the wave side
+        # exchanges.  (cfg.fetch_salt shapes a real-HTTP wave.)
         wave = scheduled
         if cfg.fetch_salt > 0:
             from ..functions.urls import salted_host
@@ -784,22 +765,18 @@ class CrawlEngine:
         # non-torrent row, so the Arrow transfer ships nulls and the UDF
         # pays only a null check outside the (rare) torrent rows.  NULL
         # magnet == not a torrent fetch / malformed metainfo.
-        has_body = "body" in fetched.columns
-        if has_body:
-            from ..sources.torrents import magnet_of_torrent
+        from ..sources.torrents import magnet_of_torrent
 
-            is_torrent_fetch = (
-                (F.col("status") == 200)
-                & ~F.col("unchanged")
-                & F.col("url").endswith(".torrent")
-                & F.col("body").isNotNull()
-            )
-            fetched = fetched.withColumn(
-                "magnet",
-                magnet_of_torrent(F.when(is_torrent_fetch, F.col("body"))),
-            )
-        else:
-            fetched = fetched.withColumn("magnet", F.lit(None).cast("string"))
+        is_torrent_fetch = (
+            (F.col("status") == 200)
+            & ~F.col("unchanged")
+            & F.col("url").endswith(".torrent")
+            & F.col("body").isNotNull()
+        )
+        fetched = fetched.withColumn(
+            "magnet",
+            magnet_of_torrent(F.when(is_torrent_fetch, F.col("body"))),
+        )
 
         if cfg.decode_payloads:
             from ..functions.images import decode_validate_image
@@ -813,20 +790,19 @@ class CrawlEngine:
             ).withColumn("computed_phash", F.col("decoded.phash"))
         else:
             fetched = fetched.withColumn("computed_phash", F.lit(None).cast("long"))
-        if self.use_markup:
-            from ..functions.markup import extract_outlinks
+        from ..functions.markup import extract_outlinks
 
-            # T1 dispatch + T2/T3 extraction over the real page bytes
-            # (html href/src grammar vs sitemap <loc> grammar by nature),
-            # evaluated once while the cache materializes: the cache holds
-            # only the small extracted array, never the body bytes.
-            fetched = fetched.withColumn(
-                "ex",
-                F.when(
-                    F.col("extractable"),
-                    extract_outlinks(F.col("body"), F.col("nature")),
-                ),
-            ).drop("outlinks")
+        # T1 dispatch + T2/T3 extraction over the real page bytes
+        # (html href/src grammar vs sitemap <loc> grammar by nature),
+        # evaluated once while the pin materializes: the pin holds only
+        # the small extracted array, never the body bytes.
+        fetched = fetched.withColumn(
+            "ex",
+            F.when(
+                F.col("extractable"),
+                extract_outlinks(F.col("body"), F.col("nature")),
+            ),
+        )
         return rd.pin(fetched.drop("bytes", "body"))
 
     @staticmethod
@@ -929,20 +905,13 @@ class CrawlEngine:
         # hottest path of the round).  Materializing `_abs` as a column
         # keeps each regex evaluated once per row; CollapseProject leaves
         # multi-referenced non-trivial aliases alone.
-        if self.use_markup:
-            ex_exploded = fetched.filter(F.col("extractable")).select(
-                # resolve_base_href: a <base href> overrides the page URL
-                # as resolution parent (ExtractorFactory.py:84-86)
-                F.coalesce(F.col("ex.base"), F.col("url")).alias("parent"),
-                (F.col("depth") + 1).alias("depth"),
-                F.explode_outer("ex.links").alias("raw"),
-            )
-        else:
-            ex_exploded = fetched.filter(F.col("extractable")).select(
-                F.col("url").alias("parent"),
-                (F.col("depth") + 1).alias("depth"),
-                F.explode_outer("outlinks").alias("raw"),
-            )
+        ex_exploded = fetched.filter(F.col("extractable")).select(
+            # resolve_base_href: a <base href> overrides the page URL
+            # as resolution parent (ExtractorFactory.py:84-86)
+            F.coalesce(F.col("ex.base"), F.col("url")).alias("parent"),
+            (F.col("depth") + 1).alias("depth"),
+            F.explode_outer("ex.links").alias("raw"),
+        )
         extracted_with_depth = rd.pin(
             ex_exploded
             .select("depth", resolve_url(F.col("parent"), F.col("raw")).alias("_abs"))
@@ -1215,9 +1184,6 @@ class CrawlEngine:
             m_,
             k_,
         )
-        # invalidate the lazily-loaded driver copy (broadcast-probe
-        # path reloads the new version's shard files next round)
-        self._bloom = None
         return cur_bv + 1
 
     def _lineage(

@@ -55,7 +55,8 @@ def engine_conf(n_shuffle: int) -> dict[str, str]:
         # driver).  Size the cache to hold several full rounds so
         # steady-state rounds recompile only the 65-80 classes whose source
         # embeds round-varying primitive literals.  Same-window A/B
-        # (tools/knob_matrix.py): median-round 13.2k -> 22.0k URLs/s.
+        # (BENCH.md, round 4 "interleaved knob matrix"): median-round
+        # 13.2k -> 22.0k URLs/s.
         # Static conf: must be set before the first session is built.
         "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.sql.session.timeZone": "UTC",
@@ -138,14 +139,6 @@ def get_spark(
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in engine_conf(n_shuffle).items():
         builder = builder.config(k, v)
-    # ad-hoc conf overrides for experiments/ops without code changes,
-    # e.g. ARTEMIS_EXTRA_CONF='{"spark.sql.codegen.wholeStage":"false"}'
-    env_conf = os.environ.get("ARTEMIS_EXTRA_CONF")
-    if env_conf:
-        import json as _json
-
-        for k, v in _json.loads(env_conf).items():
-            builder = builder.config(k, str(v))
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -7,7 +7,7 @@ checking headers for redirect/304/4xx backoff (:34-49).
 In-sandbox there is no network, so "fetching" the scheduled wave is a
 deterministic join against the synthetic web:
 
-  wave JOIN link_graph  ON url       -> status, location, outlinks, sha
+  wave JOIN link_graph  ON url       -> status, location, sha, body
        JOIN payloads    ON image_id  -> bytes, caption, fmt   (200s only)
 
 The wave is salted-repartitioned by host first (north_rule skew
@@ -22,32 +22,26 @@ signature and batch shape so the swap is drop-in.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.urls import salted_host
 
 FETCH_RESULT_COLS = [
     "status",
     "location",
-    "outlinks",
     "content_sha224",
     "image_id",
 ]
 
 
-def build_web(
-    link_graph: DataFrame,
-    num_partitions: int,
-    include_outlinks: bool = True,
-    include_body: bool = True,
-) -> DataFrame:
+def build_web(link_graph: DataFrame, num_partitions: int) -> DataFrame:
     """The page side of the synthetic web: link_graph (HTTP metadata +
     page body markup), hash-partitioned by host and pre-sorted on the
     round-join keys.
+
+    The page ``body`` is the only link source the round reads (T2/T3
+    markup extraction, and the .torrent metainfo the magnet queue
+    parses); the pre-parsed ``outlinks`` array is left out of the
+    cache — it duplicates the links in the body.
 
     Payload bytes deliberately stay in a SEPARATE image_id-keyed cache
     (:func:`build_payload_cache`): pages share images ~10:1, so joining
@@ -62,35 +56,11 @@ def build_web(
     """
     from ..functions.urls import host_of
 
-    # `body` (rendered page markup, T2/T3 real extraction) appears in
-    # fixtures generated after round 1; older web dirs fall back to the
-    # outlinks-join extraction path.  Exactly one of body/outlinks feeds
-    # extraction in any given engine config, so the caller NULLs out the
-    # unused one — the page-body markup and the pre-parsed outlink array
-    # duplicate the same links, and caching both roughly doubles the
-    # one-time cache build (sort + memory) and the per-round join width.
-    if "body" not in link_graph.columns:
-        body = F.lit(None).cast("binary").alias("body")
-    elif include_body:
-        body = F.col("body")
-    else:
-        # even when markup extraction is off (outlinks-join path), the
-        # bytes of .torrent resources must flow through the fetch: the
-        # magnet-queue handler (S6) parses them, and the pre-parsed
-        # outlink array carries no substitute.  Torrent rows are rare, so
-        # the cache stays slim.
-        body = F.when(F.col("url").endswith(".torrent"), F.col("body")).alias("body")
-    fetch_cols = [
-        F.col(c)
-        if include_outlinks or c != "outlinks"
-        else F.lit(None).cast("array<string>").alias("outlinks")
-        for c in FETCH_RESULT_COLS
-    ]
     lg = link_graph.select(
         host_of(F.col("url")).alias("g_host"),
         F.col("url").alias("g_url"),
-        *fetch_cols,
-        body,
+        *FETCH_RESULT_COLS,
+        "body",
     )
     return lg.repartition(num_partitions, "g_host").sortWithinPartitions(
         "g_host", "g_url"
@@ -157,8 +127,8 @@ def http_fetch_stub(wave: DataFrame) -> DataFrame:
             for pdf in batches:           # one Arrow batch of one host-salt slice
                 # issue conditional GETs (If-Modified-Since from last_visited,
                 # HTTPDefaultHandler.py:24-32), 4KB streamed reads, 1MB spool
-                yield pdf.assign(status=..., location=..., outlinks=...,
-                                 content_sha224=..., bytes=...)
+                yield pdf.assign(status=..., location=..., content_sha224=...,
+                                 image_id=..., body=...)
 
         wave.mapInPandas(fetch_batch, schema=WAVE_SCHEMA + FETCH_RESULT_COLS)
 

@@ -40,9 +40,11 @@ import json
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.urls import host_partition_key
 
 # Per-table primary key for delta-chain reconstruction.  Only tables
 # registered here may use write_version_delta.
@@ -337,11 +339,6 @@ def with_bucket(schema: T.StructType) -> T.StructType:
     return T.StructType(schema.fields + [T.StructField("bucket", T.IntegerType(), True)])
 
 
-def bucket_of(host: Column, n_buckets: int) -> Column:
-    """The state bucket of a host: pmod(xxhash64(host), n_buckets)."""
-    return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
-
-
 class DeltaTable:
     """One delta-log state table: url_seen, host_stats or robots_cache.
 
@@ -397,7 +394,7 @@ class DeltaTable:
         """Write the round's rows (keyed by ``host``-derived bucket);
         returns (version, new chain) for the manifest commit."""
         chain = self.chain()
-        rows = rows.withColumn("bucket", bucket_of(F.col("host"), self.n_buckets))
+        rows = rows.withColumn("bucket", host_partition_key(F.col("host"), self.n_buckets))
         if chain and len(chain) < self.max_chain:
             if self.delta_parts is not None:
                 rows = rows.coalesce(self.delta_parts)

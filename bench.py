@@ -106,17 +106,7 @@ def bench_crawl(spark, tier: str, rounds: int, budget: int) -> dict:
         bloom_shards=cpus * 2,
         light_stats=True,
         revisit_delay_rounds=int(os.environ.get("ARTEMIS_BENCH_REVISIT", str(10**6))),
-        # A/B knobs: quantify the cost of the real per-round work
-        # (markup extraction over page bytes, payload decode+phash) vs
-        # the scheduler core — VERDICT r02 asked for this controlled split
-        extract_markup=bool(int(os.environ.get("ARTEMIS_BENCH_MARKUP", "1"))),
-        decode_payloads=bool(int(os.environ.get("ARTEMIS_BENCH_DECODE", "1"))),
     )
-    # A/B knob (defaults to the CrawlConfig default when unset):
-    # delta-chain compaction threshold
-    chain_env = os.environ.get("ARTEMIS_BENCH_MAX_CHAIN")
-    if chain_env is not None:
-        cfg.state_delta_max_chain = int(chain_env)
     eng = CrawlEngine(spark, web_dir, state_dir, cfg, seeds_path=seeds_path)
     t0 = time.monotonic()
     stats = eng.run(rounds)

@@ -1,5 +1,4 @@
-"""tools/bench_runner.py summaries: the two-level pair summary and the
-true median the bench tools report."""
+"""tools/bench_runner.py: the two-level pair summary."""
 
 import json
 import os
@@ -10,7 +9,7 @@ import pytest
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from bench_runner import median_of, pair_summary  # noqa: E402
+from bench_runner import pair_summary  # noqa: E402
 
 
 def _run(seq, cpus, median):
@@ -45,9 +44,3 @@ def test_pair_summary_replays_r4_log():
     assert summary["efficiency_of_medians"] == 0.684
     assert "partial" not in summary
 
-
-def test_median_of_is_the_true_median():
-    rs = [{"v": 1.0}, {"v": 2.0}, {"v": 4.0}, {"v": 10.0}, {"v": None}]
-    assert median_of(rs, "v") == 3.0  # mean of the two middle values
-    assert median_of(rs[:3], "v") == 2.0
-    assert median_of([], "v") is None

@@ -15,6 +15,16 @@ BUDGET = 5
 
 @pytest.fixture(scope="module")
 def engine_run(spark, tiny_web, tmp_path_factory):
+    """(engine, per-round stats, bloom traffic) of one N_ROUNDS crawl.
+
+    The bloom traffic records, over the whole run, every load of a full
+    bloom version into the driver (``BloomShards.load_dir``) and every
+    broadcast of a bitset (a ``SparkContext.broadcast`` value carrying
+    ``"bits"``) — both patched on their classes, so any caller is seen."""
+    from pyspark import SparkContext
+
+    from artemis_spark.operators.bloom import BloomShards
+
     state = str(tmp_path_factory.mktemp("state"))
     eng = CrawlEngine(
         spark,
@@ -22,8 +32,23 @@ def engine_run(spark, tiny_web, tmp_path_factory):
         state,
         CrawlConfig(politeness_budget=BUDGET, num_partitions=4, bloom_shards=8),
     )
-    stats = eng.run(N_ROUNDS)
-    return eng, stats
+    traffic = {"load_dir": [], "bitset_broadcast": 0}
+    load_dir, broadcast = BloomShards.load_dir, SparkContext.broadcast
+
+    def recording_load_dir(cls, path):
+        traffic["load_dir"].append(path)
+        return load_dir(path)
+
+    def recording_broadcast(self, value):
+        if isinstance(value, dict) and "bits" in value:
+            traffic["bitset_broadcast"] += 1
+        return broadcast(self, value)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(BloomShards, "load_dir", classmethod(recording_load_dir))
+        mp.setattr(SparkContext, "broadcast", recording_broadcast)
+        stats = eng.run(N_ROUNDS)
+    return eng, stats, traffic
 
 
 @pytest.fixture(scope="module")
@@ -38,14 +63,39 @@ def _engine_log(eng):
 
 
 def test_rounds_progress(engine_run):
-    _, stats = engine_run
+    _, stats, _ = engine_run
     assert len(stats) == N_ROUNDS
     assert stats[0]["scheduled"] > 0
     assert stats[1]["scheduled"] > 0
 
 
+def test_rounds_neither_load_nor_broadcast_a_bitset(engine_run):
+    """Every round probes the bloom shard-locally: no round loads a full
+    bloom version into the driver or broadcasts a bitset."""
+    _, stats, traffic = engine_run
+    assert len(stats) == N_ROUNDS
+    assert traffic == {"load_dir": [], "bitset_broadcast": 0}
+
+
+def test_web_without_page_bodies_is_refused(spark, tiny_web, tmp_path):
+    """Outlinks come from the page bytes: a link_graph without ``body``
+    is refused when the engine is built, before any round runs."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    web = tmp_path / "web"
+    shutil.copytree(tiny_web, web)
+    lg = pq.read_table(web / "link_graph.parquet")
+    pq.write_table(lg.drop(["body"]), web / "link_graph.parquet")
+    state = tmp_path / "state"
+    with pytest.raises(ValueError, match="'body'"):
+        CrawlEngine(spark, str(web), str(state), CrawlConfig(num_partitions=4))
+    assert not state.exists()
+
+
 def test_crawl_order_matches_model(engine_run, model_run):
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     model, result = model_run
     log = _engine_log(eng)
     for r in range(N_ROUNDS):
@@ -59,7 +109,7 @@ def test_crawl_order_matches_model(engine_run, model_run):
 
 
 def test_crawl_log_rows_match_model(engine_run, model_run):
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     model, result = model_run
     key = lambda d: (d["round"], d["url"])
     eng_rows = {
@@ -74,7 +124,7 @@ def test_crawl_log_rows_match_model(engine_run, model_run):
 
 
 def test_final_url_seen_matches_model(engine_run, model_run):
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     model, result = model_run
     seen_df = eng.store.read("url_seen")
     eng_seen = {
@@ -89,7 +139,7 @@ def test_final_url_seen_matches_model(engine_run, model_run):
 
 
 def test_lineage_metrics_written(engine_run):
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     lm = eng.store.read_appended("lineage_metrics")
     rows = lm.collect()
     assert len(rows) > 0
@@ -104,7 +154,7 @@ def test_payload_validation_all_ok(engine_run):
     """input_hint: decoded phash + dims must equal the fixture metadata
     for every saved payload (PSNR/allclose equivalence is asserted
     per-codec in test_images.py)."""
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     log = eng.store.read_appended("crawl_log")
     saved = log.filter(log["image_id"].isNotNull()).collect()
     assert len(saved) > 0
@@ -119,7 +169,7 @@ def test_torrent_magnets_queued(engine_run, model_run):
     /root/reference/src/Task.py:47-59).  Row-level equality with the
     model is covered by test_crawl_log_rows_match_model; this asserts
     the torrent-specific invariants directly."""
-    eng, _ = engine_run
+    eng, _, _ = engine_run
     _, result = model_run
     queued = [r for r in _engine_log(eng) if r["status"] == 997]
     assert queued, "no magnet task was queued from the seeded .torrent"
@@ -268,71 +318,6 @@ def test_persist_failure_waits_for_writers_and_resumes(
         return seen, log
 
     assert snap(eng) == snap(straight)
-
-
-def test_markup_extraction_equals_outlink_join(spark, tmp_path, tiny_web):
-    """T2/T3: extracting outlinks from the rendered page BYTES (markup
-    grammar) must produce the identical crawl to the legacy
-    link_graph.outlinks join — the rendered web is the same web."""
-    from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
-
-    markup = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "markup"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8,
-                    extract_markup=True),
-    )
-    markup.run(3)
-    legacy = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "legacy"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8,
-                    extract_markup=False),
-    )
-    legacy.run(3)
-
-    def log(eng):
-        return {
-            (r["round"], r["url"], r["status"], r["image_id"], r["phash"])
-            for r in eng.store.read_appended("crawl_log").collect()
-        }
-
-    assert log(markup) == log(legacy)
-    seen = lambda e: {
-        (r["url"], r["last_hash"], r["refresh_rate"])
-        for r in e.store.read("url_seen").collect()
-    }
-    assert seen(markup) == seen(legacy)
-
-
-def test_shard_local_bloom_same_results(spark, tmp_path, tiny_web):
-    """The shard-local bloom probe (scale path: no bitset broadcast) must
-    leave every crawl output unchanged — it is a physical probe strategy
-    only; exactness is guaranteed by the downstream anti-join either way."""
-    from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
-
-    base = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "bcast"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8),
-    )
-    base.run(3)
-    local = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "shardlocal"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8,
-                    bloom_shard_local=True),
-    )
-    local.run(3)
-
-    def log(eng):
-        return {
-            (r["round"], r["url"], r["status"], r["image_id"], r["phash"])
-            for r in eng.store.read_appended("crawl_log").collect()
-        }
-
-    assert log(local) == log(base)
-    seen = lambda e: {
-        (r["url"], r["last_hash"], r["refresh_rate"])
-        for r in e.store.read("url_seen").collect()
-    }
-    assert seen(local) == seen(base)
 
 
 def test_salted_fetch_wave_same_results(spark, tmp_path, tiny_web):

@@ -120,10 +120,15 @@ flags, one annotated relation) and `ranked` (politeness window over
 the fetchable slice of `gated`).  robots_blocked, auth_deferred,
 fetchable, scheduled and deferred are filter SCANS of those pins —
 they appear in downstream plans as Filter-over-leaf, nothing else.
+The bloom probe inside `gated` is shard-local: candidates exchange by
+bloom shard id and each mapInPandas task loads its own shard files
+(no bitset broadcast; round 0, before any bloom version, skips the
+probe).  A pin's scan carries no partitioning, so `ranked`'s window
+exchanges the fetchable slice by host once.
 
 Before r5 each branch was its own localCheckpoint pin; because pin
 creation executes eagerly (see Round-plan pinning), each one re-ran
-the whole O(wave) gate chain — bloom Arrow UDF, validate join, robots
+the whole O(wave) gate chain — bloom probe, validate join, robots
 join, window — up to 4x per round.  Measured at local[1], tier=bench,
 1024-budget waves: median round wall 122-188s → 84-107s and the
 round's 'seen_updates materialize' phase (which used to pay 3 of the

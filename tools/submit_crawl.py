@@ -141,7 +141,6 @@ def main() -> None:
     run.add_argument("--revisit-rounds", type=int, default=10**6, help="recrawl staleness in rounds")
     run.add_argument("--seeds", help="seed parquet path (default: <web-dir>/seeds.parquet)")
     run.add_argument("--master", help="plain-python mode only; ignored under spark-submit")
-    run.add_argument("--no-markup", action="store_true", help="outlinks via link_graph join, not page-bytes grammar")
     run.add_argument("--no-decode", action="store_true", help="skip payload decode+phash validation")
     run.add_argument("--light-stats", action="store_true", help="skip info-only counts (bench mode)")
     args = ap.parse_args()
@@ -176,7 +175,6 @@ def main() -> None:
         num_partitions=args.partitions,
         bloom_shards=max(args.partitions * 2, 8),
         revisit_delay_rounds=args.revisit_rounds,
-        extract_markup=not args.no_markup,
         decode_payloads=not args.no_decode,
         light_stats=args.light_stats,
     )
