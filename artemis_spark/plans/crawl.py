@@ -47,7 +47,8 @@ from ..operators.dedup import (
     split_by_bloom,
     validate_against_seen,
 )
-from ..functions.markup import first_login_form
+from ..functions.images import decode_validate_image
+from ..functions.markup import extract_outlinks, first_login_form
 from ..operators.politeness import politeness_ranked, with_score
 from ..operators.robots import apply_robots_flags, sitemap_candidates
 from ..rounds import EPOCH_SQL, ROUND_SECONDS, round_ts
@@ -103,7 +104,6 @@ class CrawlConfig:
     # key, and a chain of N versions is compacted to one bucketed base
     # to bound read amplification.  <= 1 compacts every round.
     state_delta_max_chain: int = 8
-    decode_payloads: bool = True  # disable for pure scheduler benchmarks
     # salt>0 shapes the wave for a real per-host HTTP fetcher; the
     # synthetic join path leaves it 0 (the join partitions by url).
     fetch_salt: int = 0
@@ -395,18 +395,21 @@ class CrawlEngine:
 
     def run_round(self) -> dict:
         """One crawl round as a composition of stages: read state →
-        route + dedupe → gate (bloom, validate, robots, auth) → schedule
-        (politeness top-k) → fetch + extract → persist + commit.
+        route + dedupe + bloom probe → gate (validate, robots, auth) →
+        schedule (politeness top-k) → fetch + extract → persist + commit.
         Nothing the round writes is visible until the manifest commit;
         every pin it made is released however it ends."""
         rd = _Round(self.store, self.cfg)
         r = rd.r
         try:
             url_seen, frontier, recrawl_due = self._read_state(rd)
-            candidates, n_in, is_empty = self._route(rd, frontier, recrawl_due)
-            if is_empty:
+            candidates, n_in = self._route(rd, frontier, recrawl_due)
+            if n_in == 0:
                 self._commit_empty(r)
-                return {"round": r, "scheduled": 0, "fetched": 0, "new_candidates": 0}
+                return {
+                    "round": r, "candidates": 0, "scheduled": 0, "fetched": 0,
+                    "new_candidates": 0,
+                }
             gate = self._gate(rd, candidates, url_seen)
             scheduled, deferred = self._schedule(rd, gate)
             fetched = self._fetch(rd, scheduled)
@@ -426,8 +429,8 @@ class CrawlEngine:
             n_next = None if self.cfg.light_stats else next_frontier.count()
         finally:
             rd.release()
-        # return contract: under cfg.light_stats the info-only counters
-        # "candidates"/"new_candidates" are None (not 0, not a sentinel
+        # return contract: when the frontier-size count above is skipped,
+        # the info-only "new_candidates" is None (not 0, not a sentinel
         # int) — consumers aggregating per-round counts must skip None.
         return {
             "round": r,
@@ -464,64 +467,57 @@ class CrawlEngine:
 
     def _route(
         self, rd: _Round, frontier: DataFrame, recrawl_due: DataFrame
-    ) -> tuple[DataFrame, int | None, bool]:
-        """(candidates pin, candidate count or None, round is empty)."""
+    ) -> tuple[DataFrame, int]:
+        """(candidates pin, candidate count): admitted, routed, deduped
+        and bloom-probed rows; a count of 0 is an empty round."""
         cfg = self.cfg
         # F2 protocol rules + nature gating (tor/torrent unfetchable
         # in-sandbox) and F3 domain rules (broadcast blocklist anti-join)
-        # apply BEFORE the routing exchange: the light_stats emptiness
-        # probe below can then take(1) partition-by-partition over the
-        # union — frontier splits first, so the common (non-empty) case
-        # never evaluates the recrawl member, whose delta-chain
-        # reconstruction aggregate would otherwise run a full O(|state|)
-        # shuffle every round just to prove the round is non-empty.
+        # filter rows before the routing exchange, so no rejected row
+        # is shuffled, deduped or probed.
         blocked_hosts = self.domain_rules.filter(~F.col("allowed")).select("host")
-
-        def _admit(df):
-            return df.filter(
-                scheme_of(F.col("url")).isin(*cfg.allowed_schemes)
-                & ~F.col("nature").isin("web_static_tor", "web_static_torrent")
-            ).join(F.broadcast(blocked_hosts), "host", "left_anti")
-
-        pre_shuffle = _admit(frontier.unionByName(recrawl_due))
+        admitted = frontier.unionByName(recrawl_due).filter(
+            scheme_of(F.col("url")).isin(*cfg.allowed_schemes)
+            & ~F.col("nature").isin("web_static_tor", "web_static_torrent")
+        ).join(F.broadcast(blocked_hosts), "host", "left_anti")
         # THE routing shuffle (reference P2, /root/reference/src/Slave.py:145-172):
         # one hash exchange by host up front, which the within-batch
         # dedupe reuses.  Pins do not carry it on: each later host-keyed
         # consumer of a pin (politeness window, fetch join) re-exchanges
         # the wave-sized slice it reads (README "Round execution shape").
-        candidates = rd.pin(dedupe_within_batch(
-            pre_shuffle.repartition(cfg.num_partitions, "host")
-        ))
-        if cfg.light_stats:
-            # emptiness only, two-step: the frontier-only probe is one
-            # parquet split's worth of work, and under AQE it is the only
-            # shape that stays cheap — isEmpty on the full union would
-            # materialize the recrawl member's delta-reconstruction
-            # shuffle stage (O(|state|), growing every round) before the
-            # limit even runs.  Only a drained frontier (end of crawl)
-            # pays for the exact recrawl-inclusive probe.
-            # (count skipped under light_stats: key kept, value None)
-            return candidates, None, _admit(frontier).isEmpty() and pre_shuffle.isEmpty()
-        n_in = candidates.count()
-        return candidates, n_in, n_in == 0
-
-    def _gate(self, rd: _Round, candidates: DataFrame, url_seen: DataFrame) -> _Gate:
-        """The gate chain — bloom probe → validate join → robots → auth
-        flags — materialized once as the ``gated`` pin; every branch of
-        it is a filter scan of that pin."""
-        cfg, r, now = self.cfg, rd.r, rd.now
-        # F1 bloom pre-filter -> F4 exact validate.  Before the first
-        # bloom version (round 0) nothing has been seen: bootstrap
-        # commits an empty url_seen, and every later round commits
-        # url_seen and bloom together, so skipping the probe is exact.
+        deduped = dedupe_within_batch(
+            admitted.repartition(cfg.num_partitions, "host")
+        )
+        # F1 bloom pre-filter (the slave's lossy alreadySent tier,
+        # /root/reference/src/Slave.py:118-142), probed once per
+        # candidate inside this pin: the gate's bloom-negative and
+        # bloom-positive branches are filter scans of its maybe_seen
+        # column.  Before the first bloom version (round 0) nothing has
+        # been seen: bootstrap commits an empty url_seen, and every
+        # later round commits url_seen and bloom together, so skipping
+        # the probe is exact.
         bloom_v = self.store.current_version("bloom")
         if bloom_v >= 0:
             probed = with_bloom_maybe_seen_shard_local(
-                candidates, self._bloom_path(bloom_v), cfg.num_partitions
+                deduped, self._bloom_path(bloom_v), cfg.num_partitions
             )
         else:
-            probed = candidates.withColumn("maybe_seen", F.lit(False))
-        definitely_new, maybe_seen = split_by_bloom(probed)
+            probed = deduped.withColumn("maybe_seen", F.lit(False))
+        candidates = rd.pin(probed)
+        # Creating the pin already ran its shuffle stages, the O(|state|)
+        # recrawl reconstruction among them (AQE executes them when the
+        # lazy checkpoint is built, PLANS.md "Round-plan pinning"), so
+        # the count only reads rows the gate reads anyway.
+        return candidates, candidates.count()
+
+    def _gate(self, rd: _Round, candidates: DataFrame, url_seen: DataFrame) -> _Gate:
+        """The gate chain — validate join → robots → auth flags over the
+        bloom-probed candidates — materialized once as the ``gated``
+        pin; every branch of it is a filter scan of that pin."""
+        cfg, r, now = self.cfg, rd.r, rd.now
+        # F4 exact validate (the master's Validator, Master.py:284-314)
+        # of the bloom positives; bloom negatives cannot be in url_seen.
+        definitely_new, maybe_seen = split_by_bloom(candidates)
         schedulable = as_new(definitely_new).unionByName(
             validate_against_seen(maybe_seen, url_seen, r, cfg.revisit_delay_rounds)
         )
@@ -555,15 +551,15 @@ class CrawlEngine:
             .distinct()
         )
         # One broadcast LEFT join + flag columns, NOT a union/split of
-        # semi/anti branches.  The whole gate chain (bloom probe ->
-        # validate join -> robots join -> auth flags) is materialized
-        # ONCE as the `gated` pin; every branch below — robots_blocked,
+        # semi/anti branches.  The whole gate chain (validate join ->
+        # robots join -> auth flags) is materialized ONCE as the
+        # `gated` pin; every branch below — robots_blocked,
         # auth_deferred, fetchable — is a filter SCAN of that pin.
         # Previously each branch was its own lazy pin whose first action
         # re-executed the unpinned chain from `candidates`, so the same
-        # O(wave) work (including the bloom probe and the validate
-        # join against url_seen) ran up to 4x per round — the dominant
-        # share of the r4 "seen_updates materialize" phase.
+        # O(wave) work (including the validate join against url_seen)
+        # ran up to 4x per round — the dominant share of the r4
+        # "seen_updates materialize" phase.
         live_flagged = decided.join(
             F.broadcast(live_sess_hosts.withColumn("_live", F.lit(True))),
             "host",
@@ -717,10 +713,9 @@ class CrawlEngine:
         )
         scored = with_score(gate.fetchable, hs_slice)
         # one window evaluation: the gated pin's scan carries no
-        # partitioning (the bloom probe repartitions by shard id, and a
-        # localCheckpoint scan drops it anyway), so the window exchanges
-        # the fetchable slice by host once; scheduled and deferred are
-        # filter scans of the ranked pin
+        # partitioning (a localCheckpoint scan drops it), so the window
+        # exchanges the fetchable slice by host once; scheduled and
+        # deferred are filter scans of the ranked pin
         ranked = rd.pin(politeness_ranked(scored))
         budget = self.cfg.politeness_budget
         return (
@@ -752,11 +747,7 @@ class CrawlEngine:
         )
         saved = (F.col("status") == 200) & ~unchanged & _fmt_ok(cfg.allowed_fmts)
 
-        fetched = (
-            fetched.withColumn("unchanged", unchanged)
-            .withColumn("saved", saved)
-            .withColumn("extractable", saved)
-        )
+        fetched = fetched.withColumn("unchanged", unchanged).withColumn("saved", saved)
 
         # S6 .torrent -> magnet (Task.buildFromFile,
         # /root/reference/src/Task.py:47-59): a fetched, changed
@@ -778,19 +769,13 @@ class CrawlEngine:
             magnet_of_torrent(F.when(is_torrent_fetch, F.col("body"))),
         )
 
-        if cfg.decode_payloads:
-            from ..functions.images import decode_validate_image
-
-            fetched = fetched.withColumn(
-                "decoded",
-                F.when(
-                    F.col("saved") & ~_is_sitemap() & F.col("bytes").isNotNull(),
-                    decode_validate_image(F.col("bytes")),
-                ),
-            ).withColumn("computed_phash", F.col("decoded.phash"))
-        else:
-            fetched = fetched.withColumn("computed_phash", F.lit(None).cast("long"))
-        from ..functions.markup import extract_outlinks
+        fetched = fetched.withColumn(
+            "decoded",
+            F.when(
+                F.col("saved") & ~_is_sitemap() & F.col("bytes").isNotNull(),
+                decode_validate_image(F.col("bytes")),
+            ),
+        ).withColumn("computed_phash", F.col("decoded.phash"))
 
         # T1 dispatch + T2/T3 extraction over the real page bytes
         # (html href/src grammar vs sitemap <loc> grammar by nature),
@@ -799,7 +784,7 @@ class CrawlEngine:
         fetched = fetched.withColumn(
             "ex",
             F.when(
-                F.col("extractable"),
+                F.col("saved"),
                 extract_outlinks(F.col("body"), F.col("nature")),
             ),
         )
@@ -841,7 +826,7 @@ class CrawlEngine:
             (F.col("computed_phash") == F.col("expected_phash"))
             & (F.col("decoded.w") == F.col("expected_w").cast("int"))
             & (F.col("decoded.h") == F.col("expected_h").cast("int")),
-        ) if self.cfg.decode_payloads else F.lit(None).cast("boolean")
+        )
 
         def marker_rows(df: DataFrame, status: int, url: str = "url") -> DataFrame:
             """Unfetched rows logged under a status marker."""
@@ -905,7 +890,7 @@ class CrawlEngine:
         # hottest path of the round).  Materializing `_abs` as a column
         # keeps each regex evaluated once per row; CollapseProject leaves
         # multi-referenced non-trivial aliases alone.
-        ex_exploded = fetched.filter(F.col("extractable")).select(
+        ex_exploded = fetched.filter(F.col("saved")).select(
             # resolve_base_href: a <base href> overrides the page URL
             # as resolution parent (ExtractorFactory.py:84-86)
             F.coalesce(F.col("ex.base"), F.col("url")).alias("parent"),

@@ -16,13 +16,6 @@ import zipfile
 
 from pyspark.sql import SparkSession
 
-# Iceberg jars are not present in this environment; the state store
-# (sources/state.py) falls back to versioned-parquet snapshots behind the
-# same interface.  On a real cluster, set ARTEMIS_ICEBERG=1 with the
-# iceberg-spark-runtime jar on the classpath.
-ICEBERG_AVAILABLE = bool(int(os.environ.get("ARTEMIS_ICEBERG", "0")))
-
-
 def engine_conf(n_shuffle: int) -> dict[str, str]:
     """The engine-required Spark conf as a plain dict.
 
@@ -93,10 +86,9 @@ def engine_conf(n_shuffle: int) -> dict[str, str]:
         # split scans finer than the 128MB default: sandbox inputs are
         # tens of MB and a single split serializes the whole first stage
         # (scan+explode+canonicalize fuse into it).  On a 100TB cluster
-        # raise this back toward 128-256MB via extra_conf.
-        "spark.sql.files.maxPartitionBytes": os.environ.get(
-            "ARTEMIS_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)
-        ),
+        # raise this back toward 128-256MB via extra_conf or
+        # spark-submit --conf.
+        "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
         # pack small files: the default openCostInBytes (4MB) gives every
         # file a 4MB floor weight, so with 4MB maxPartitionBytes each
         # bucket-partitioned delta file becomes its OWN scan task — a
@@ -106,9 +98,7 @@ def engine_conf(n_shuffle: int) -> dict[str, str]:
         # rounds; see BENCH.md round 4).  64KB packs the tiny delta
         # files ~60-to-a-split while leaving large-file splitting to
         # maxPartitionBytes.
-        "spark.sql.files.openCostInBytes": os.environ.get(
-            "ARTEMIS_OPEN_COST_BYTES", str(64 * 1024)
-        ),
+        "spark.sql.files.openCostInBytes": str(64 * 1024),
     }
 
 

@@ -1,9 +1,9 @@
 """Versioned table store with atomic round commits — the Iceberg stand-in.
 
 The north_rule calls for Iceberg tables (MERGE INTO url_seen, snapshot
-isolation, resume-from-any-round).  Iceberg jars are absent in this
-environment (session.py:ICEBERG_AVAILABLE), so this module provides the
-same contract over plain parquet:
+isolation, resume-from-any-round).  The session ships no Iceberg
+runtime jar, so this module provides the same contract over plain
+parquet:
 
   * every mutable table (url_seen, host_stats, robots_cache, frontier,
     bloom bits) is written as a new immutable version directory

@@ -20,10 +20,14 @@ def engine_run(spark, tiny_web, tmp_path_factory):
     The bloom traffic records, over the whole run, every load of a full
     bloom version into the driver (``BloomShards.load_dir``) and every
     broadcast of a bitset (a ``SparkContext.broadcast`` value carrying
-    ``"bits"``) — both patched on their classes, so any caller is seen."""
+    ``"bits"``) — both patched on their classes, so any caller is seen —
+    and, per round, the ``MapInPandas`` nodes in the physical plans of
+    all the round's pins (``_Round.pin``; the bloom probe is the round's
+    only ``mapInPandas``)."""
     from pyspark import SparkContext
 
     from artemis_spark.operators.bloom import BloomShards
+    from artemis_spark.plans.crawl import _Round
 
     state = str(tmp_path_factory.mktemp("state"))
     eng = CrawlEngine(
@@ -32,8 +36,8 @@ def engine_run(spark, tiny_web, tmp_path_factory):
         state,
         CrawlConfig(politeness_budget=BUDGET, num_partitions=4, bloom_shards=8),
     )
-    traffic = {"load_dir": [], "bitset_broadcast": 0}
-    load_dir, broadcast = BloomShards.load_dir, SparkContext.broadcast
+    traffic = {"load_dir": [], "bitset_broadcast": 0, "map_in_pandas": {}}
+    load_dir, broadcast, pin = BloomShards.load_dir, SparkContext.broadcast, _Round.pin
 
     def recording_load_dir(cls, path):
         traffic["load_dir"].append(path)
@@ -44,9 +48,16 @@ def engine_run(spark, tiny_web, tmp_path_factory):
             traffic["bitset_broadcast"] += 1
         return broadcast(self, value)
 
+    def recording_pin(self, df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        nodes = traffic["map_in_pandas"]
+        nodes[self.r] = nodes.get(self.r, 0) + plan.count("MapInPandas")
+        return pin(self, df)
+
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(BloomShards, "load_dir", classmethod(recording_load_dir))
         mp.setattr(SparkContext, "broadcast", recording_broadcast)
+        mp.setattr(_Round, "pin", recording_pin)
         stats = eng.run(N_ROUNDS)
     return eng, stats, traffic
 
@@ -74,7 +85,18 @@ def test_rounds_neither_load_nor_broadcast_a_bitset(engine_run):
     bloom version into the driver or broadcasts a bitset."""
     _, stats, traffic = engine_run
     assert len(stats) == N_ROUNDS
-    assert traffic == {"load_dir": [], "bitset_broadcast": 0}
+    assert traffic["load_dir"] == [] and traffic["bitset_broadcast"] == 0
+
+
+def test_bloom_probe_runs_once_per_round(engine_run):
+    """Each candidate is probed once: round 0 (no bloom version yet)
+    plans no probe, and every later round plans exactly one
+    ``MapInPandas`` across all its pins — the gate's bloom-negative and
+    bloom-positive branches scan the probed candidates pin."""
+    _, stats, traffic = engine_run
+    assert traffic["map_in_pandas"] == {
+        s["round"]: (0 if s["round"] == 0 else 1) for s in stats
+    }
 
 
 def test_web_without_page_bodies_is_refused(spark, tiny_web, tmp_path):

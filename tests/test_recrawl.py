@@ -24,6 +24,7 @@ def runs(spark, tiny_web, tmp_path_factory):
             revisit_delay_rounds=1,
             num_partitions=4,
             bloom_shards=8,
+            light_stats=True,  # the recrawl shape perfbench measures
         ),
     )
     eng_stats = eng.run(N_ROUNDS)
@@ -54,6 +55,16 @@ def test_recrawl_happens(runs):
 
     counts = Counter(x["url"] for x in log if x["status"] not in (997, 998, 999))
     assert max(counts.values()) >= 2, "no URL was ever recrawled with delay=1"
+
+
+def test_light_stats_counts_candidates_only(runs):
+    """light_stats skips only the info-only frontier-size count: every
+    round still counts its candidates."""
+    _, stats, _ = runs
+    assert len(stats) == N_ROUNDS
+    for s in stats:
+        assert type(s["candidates"]) is int and s["candidates"] > 0, s
+        assert s["new_candidates"] is None, s
 
 
 def test_backoff_state_matches(runs):

@@ -114,17 +114,21 @@ that `decode_validate_image` already established (one Arrow round-trip
 per round, shared shape)."""
 
 GATING_NOTE = """\
-The round materializes exactly two wave-sized pins between routing and
-fetch: `gated` (bloom probe → validate join → robots flags → auth
-flags, one annotated relation) and `ranked` (politeness window over
-the fetchable slice of `gated`).  robots_blocked, auth_deferred,
-fetchable, scheduled and deferred are filter SCANS of those pins —
-they appear in downstream plans as Filter-over-leaf, nothing else.
-The bloom probe inside `gated` is shard-local: candidates exchange by
-bloom shard id and each mapInPandas task loads its own shard files
-(no bitset broadcast; round 0, before any bloom version, skips the
-probe).  A pin's scan carries no partitioning, so `ranked`'s window
-exchanges the fetchable slice by host once.
+The round materializes exactly three wave-sized pins between routing
+and fetch: `candidates` (routed, deduped and bloom-probed), `gated`
+(validate join → robots flags → auth flags over the candidates pin,
+one annotated relation) and `ranked` (politeness window over the
+fetchable slice of `gated`).  The bloom-negative and bloom-positive
+branches of the gate, robots_blocked, auth_deferred, fetchable,
+scheduled and deferred are filter SCANS of those pins — they appear in
+downstream plans as Filter-over-leaf, nothing else.  The bloom probe
+runs once per candidate, inside `candidates`, and is shard-local:
+candidates exchange by bloom shard id and each mapInPandas task loads
+its own shard files (no bitset broadcast; round 0, before any bloom
+version, skips the probe).  Probed inside `gated` instead, it would
+sit in both branches of the bloom split's union and run twice.  A
+pin's scan carries no partitioning, so `ranked`'s window exchanges
+the fetchable slice by host once.
 
 Before r5 each branch was its own localCheckpoint pin; because pin
 creation executes eagerly (see Round-plan pinning), each one re-ran

@@ -141,8 +141,7 @@ def main() -> None:
     run.add_argument("--revisit-rounds", type=int, default=10**6, help="recrawl staleness in rounds")
     run.add_argument("--seeds", help="seed parquet path (default: <web-dir>/seeds.parquet)")
     run.add_argument("--master", help="plain-python mode only; ignored under spark-submit")
-    run.add_argument("--no-decode", action="store_true", help="skip payload decode+phash validation")
-    run.add_argument("--light-stats", action="store_true", help="skip info-only counts (bench mode)")
+    run.add_argument("--light-stats", action="store_true", help="skip the info-only frontier-size count (bench mode)")
     args = ap.parse_args()
 
     _import_engine()
@@ -175,7 +174,6 @@ def main() -> None:
         num_partitions=args.partitions,
         bloom_shards=max(args.partitions * 2, 8),
         revisit_delay_rounds=args.revisit_rounds,
-        decode_payloads=not args.no_decode,
         light_stats=args.light_stats,
     )
     eng = CrawlEngine(spark, web_dir, args.state_dir, cfg, seeds_path=args.seeds)
