@@ -466,7 +466,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
 
 def q_near_dup_clusters(spark, sf_dir):
     """Transitive near-dup clusters over the MinHash-LSH pair edges
-    (iterative min-label connected components, operators/clusters.py)
+    (large-star/small-star connected components, operators/clusters.py)
     with min-id canonical selection — verified against a DuckDB
     recursive-CTE transitive closure."""
     from artemis_spark.operators.clusters import dedup_clusters

@@ -8,79 +8,18 @@ and exactly one canonical document survives.  No reference analogue
 (the reference crawls, it does not dedup corpora); this is part of the
 brief's training-data operator family.
 
-Algorithm: iterative min-label propagation — comp(v) <- min(comp(v),
-min over neighbors' comp) until fixpoint — expressed purely as
-DataFrame joins/aggregations, one Spark job per iteration.  Near-dup
-graphs are unions of near-cliques with tiny diameters, so convergence
-takes a handful of rounds; for adversarial long-chain graphs at web
-scale the drop-in upgrade is alternating large-star/small-star
-contraction (Kiveris et al., "Connected Components in MapReduce and
-Beyond"), which uses the same primitives with O(log n) rounds.  Labels
-are persisted per iteration and the previous iteration unpersisted, so
-lineage stays bounded.
+Algorithm: alternating large-star/small-star contraction (Kiveris et
+al., "Connected Components in MapReduce and Beyond") expressed purely
+as DataFrame joins/aggregations.  It converges in O(log n) rounds even
+on long chains (e.g. sliding-window shingle overlaps), where min-label
+propagation would need O(diameter) rounds.  Each round's edge list is
+localCheckpointed, so lineage stays bounded.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    id_col: str = "id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """(id, comp) with comp = min node id in the component.
-
-    ``edges`` may list each undirected edge in either (or both)
-    directions; ``nodes`` supplies the full vertex set so isolated
-    nodes come back as their own singleton component.
-    """
-    sym = (
-        edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
-        )
-        .distinct()
-        .persist()
-    )
-    # localCheckpoint (not persist): each iteration references the previous
-    # labels twice (union + convergence join), so without lineage
-    # truncation the logical plan doubles per round and Catalyst planning
-    # itself OOMs after ~10 iterations.  On a cluster with a checkpoint
-    # dir, reliable checkpoint() is the fault-tolerant equivalent.
-    labels = nodes.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-    ).localCheckpoint()
-    try:
-        for _ in range(max_iter):
-            neigh = sym.join(
-                labels, sym["s"] == labels["id"]
-            ).select(F.col("d").alias("id"), "comp")
-            new_labels = (
-                labels.unionByName(neigh)
-                .groupBy("id")
-                .agg(F.min("comp").alias("comp"))
-                .localCheckpoint()
-            )
-            changed = (
-                new_labels.join(
-                    labels.withColumnRenamed("comp", "_old"), "id"
-                )
-                .where(F.col("comp") != F.col("_old"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels
-            if changed == 0:
-                break
-        return labels
-    finally:
-        sym.unpersist()
 
 
 def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
@@ -104,13 +43,13 @@ def connected_components_star(
     max_iter: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
-    """(id, comp) via alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond").
+    """(id, comp) with comp = min node id in the component, via
+    alternating large-star/small-star contraction.
 
-    Same output contract as :func:`connected_components`, but converges
-    in O(log n) rounds even on adversarial long-chain / high-diameter
-    graphs where min-label propagation needs O(diameter) rounds.  Each
-    round is two groupBy+join passes over the shrinking edge list.
+    ``edges`` may list each undirected edge in either (or both)
+    directions; ``nodes`` supplies the full vertex set so isolated
+    nodes come back as their own singleton component.  Each round is
+    two groupBy+join passes over the shrinking edge list.
 
       large-star(u): m = min(N(u) + {u}); emit (v, m) for v in N(u), v > u
       small-star(u): over edges (u, v<u): m = min(N(u));
@@ -192,13 +131,7 @@ def dedup_clusters(
     """(doc_id, cluster_id, keep): transitive near-dup clusters over the
     pair edges, with the min-id document of each cluster kept as the
     canonical survivor (keep=true) — the standard corpus-dedup policy.
-    Documents in no pair are singleton clusters and always kept.
-
-    Uses the O(log n)-round large-star/small-star contraction by
-    default (VERDICT r03 #8): near-dup graphs are usually near-clique,
-    where min-label also converges fast, but adversarial long chains
-    (e.g. sliding-window shingle overlaps) have O(n) diameter and the
-    star variant is the only safe default at corpus scale."""
+    Documents in no pair are singleton clusters and always kept."""
     cc = connected_components_star(
         pairs, docs, src_col=src_col, dst_col=dst_col, id_col=id_col
     )

@@ -270,8 +270,7 @@ class CrawlEngine:
         # be filled (NoUserField/NoPassField) are excluded: they defer
         # forever exactly like credential-less hosts.  Legacy webs
         # without a login_pages table keep the pre-r04 behavior (every
-        # account loginable).  All lazy DataFrames: nothing is parsed
-        # until a round actually consults it.
+        # account loginable).
         _null_form = [
             F.lit(None).cast("string").alias(c)
             for c in ("form_action", "user_field", "pass_field")
@@ -298,7 +297,7 @@ class CrawlEngine:
                     & F.col("pass_field").isNotNull()
                 )
             )
-            self.loginable = (
+            loginable = (
                 self.credentials.filter(F.col("auth") != "form")
                 .select("host", "auth", "login", "lifetime_s", *_null_form)
                 .unionByName(
@@ -311,18 +310,26 @@ class CrawlEngine:
                 )
             )
         else:
-            self.loginable = self.credentials.select(
+            loginable = self.credentials.select(
                 "host", "auth", "login", "lifetime_s", *_null_form
             )
+        # Built once per engine and persisted: the rounds that consult
+        # it (the login stage, the deferred-row backoff) read the cache
+        # instead of re-parsing every login page.  The session's cache
+        # matches plans over the same files, so a cache an earlier
+        # engine left would serve the login pages as they were then:
+        # drop it first.
+        loginable.unpersist()
+        self.loginable = loginable.persist()
         self.seeds = spark.read.parquet(self.seeds_path)
 
     def close(self) -> None:
-        """Release the persisted web/payload caches.  Cached plans live
-        in the session's CacheManager until explicitly unpersisted —
-        they do NOT die with the engine object, so a long-lived session
-        running many engines (test suites, notebook reuse) leaks heap
-        without this."""
-        for df in (self.web, self.payload_cache):
+        """Release the persisted web/payload/loginable caches.  Cached
+        plans live in the session's CacheManager until explicitly
+        unpersisted — they do NOT die with the engine object, so a
+        long-lived session running many engines (test suites, notebook
+        reuse) leaks heap without this."""
+        for df in (self.web, self.payload_cache, self.loginable):
             try:
                 df.unpersist()
             except Exception:
@@ -397,19 +404,14 @@ class CrawlEngine:
         """One crawl round as a composition of stages: read state →
         route + dedupe + bloom probe → gate (validate, robots, auth) →
         schedule (politeness top-k) → fetch + extract → persist + commit.
-        Nothing the round writes is visible until the manifest commit;
-        every pin it made is released however it ends."""
+        An empty round runs the same stages over no rows.  Its totals are
+        the sums of the lineage rows it committed; nothing it writes is
+        visible until the manifest commit, and every pin it made is
+        released however it ends."""
         rd = _Round(self.store, self.cfg)
-        r = rd.r
         try:
             url_seen, frontier, recrawl_due = self._read_state(rd)
-            candidates, n_in = self._route(rd, frontier, recrawl_due)
-            if n_in == 0:
-                self._commit_empty(r)
-                return {
-                    "round": r, "candidates": 0, "scheduled": 0, "fetched": 0,
-                    "new_candidates": 0,
-                }
+            candidates = self._route(rd, frontier, recrawl_due)
             gate = self._gate(rd, candidates, url_seen)
             scheduled, deferred = self._schedule(rd, gate)
             fetched = self._fetch(rd, scheduled)
@@ -421,23 +423,21 @@ class CrawlEngine:
                 rd, candidates, gate, scheduled, fetched, crawl_log, extracted,
                 next_frontier, seen_updates,
             )
-            totals = lineage.groupBy().agg(
-                F.sum("urls_scheduled").alias("s"),
-                F.sum("urls_fetched").alias("f"),
-                F.sum("urls_robots_blocked").alias("b"),
-            ).collect()[0]
+            # <= num_partitions rows, already materialized by their write
+            lineage_rows = lineage.collect()
             n_next = None if self.cfg.light_stats else next_frontier.count()
         finally:
             rd.release()
+        total = lambda c: sum(row[c] for row in lineage_rows)
         # return contract: when the frontier-size count above is skipped,
         # the info-only "new_candidates" is None (not 0, not a sentinel
         # int) — consumers aggregating per-round counts must skip None.
         return {
-            "round": r,
-            "candidates": n_in,
-            "scheduled": int(totals["s"] or 0),
-            "robots_blocked": int(totals["b"] or 0),
-            "fetched": int(totals["f"] or 0),
+            "round": rd.r,
+            "candidates": total("urls_in"),
+            "scheduled": total("urls_scheduled"),
+            "robots_blocked": total("urls_robots_blocked"),
+            "fetched": total("urls_fetched"),
             "new_candidates": n_next,
             "wall_ms": wall_ms,
         }
@@ -467,9 +467,9 @@ class CrawlEngine:
 
     def _route(
         self, rd: _Round, frontier: DataFrame, recrawl_due: DataFrame
-    ) -> tuple[DataFrame, int]:
-        """(candidates pin, candidate count): admitted, routed, deduped
-        and bloom-probed rows; a count of 0 is an empty round."""
+    ) -> DataFrame:
+        """The candidates pin: admitted, routed, deduped and
+        bloom-probed rows (none at all in an empty round)."""
         cfg = self.cfg
         # F2 protocol rules + nature gating (tor/torrent unfetchable
         # in-sandbox) and F3 domain rules (broadcast blocklist anti-join)
@@ -503,12 +503,7 @@ class CrawlEngine:
             )
         else:
             probed = deduped.withColumn("maybe_seen", F.lit(False))
-        candidates = rd.pin(probed)
-        # Creating the pin already ran its shuffle stages, the O(|state|)
-        # recrawl reconstruction among them (AQE executes them when the
-        # lazy checkpoint is built, PLANS.md "Round-plan pinning"), so
-        # the count only reads rows the gate reads anyway.
-        return candidates, candidates.count()
+        return rd.pin(probed)
 
     def _gate(self, rd: _Round, candidates: DataFrame, url_seen: DataFrame) -> _Gate:
         """The gate chain — validate join → robots → auth flags over the
@@ -1040,8 +1035,9 @@ class CrawlEngine:
         next_frontier: DataFrame,
         seen_updates: DataFrame,
     ) -> tuple[int, DataFrame, DataFrame]:
-        """Write every table of the round and commit the manifest;
-        returns (wall_ms, lineage pin, next_frontier pin)."""
+        """Write every table of the round, an empty one's too, and
+        commit the manifest; returns (wall_ms, lineage pin, next_frontier
+        pin), both pins materialized by their writes."""
         store, r = self.store, rd.r
         # host PageRank proxy: inbound links observed this round.  In the
         # delta-log layout (A3 at scale) these per-host increments are the
@@ -1066,27 +1062,17 @@ class CrawlEngine:
                 return store.current_version("auth_sessions")
             return store.write_version("auth_sessions", gate.sessions_next)
 
-        # Materialize the round's heavy shared parent ONCE (the fetch
-        # join + status/extraction projection), then overlap its
-        # independent consumers in threads: the seen_updates pin every
-        # persist job reuses, the exploded resolve+canonicalize
-        # extraction pin (the round's regex-heaviest projection, needed
-        # by the frontier and host_stats jobs), and the two early
-        # persists — robots_cache and auth_sessions read only pins the
-        # fetch job already materialized (refreshed, gated), so they
-        # overlap the extraction materialize instead of serializing
-        # after it in the write tail.  Sequencing matters: two concurrent
-        # jobs racing to compute a not-yet-materialized pin would each
-        # schedule its full upstream (the fetch join first of all).
-        fetched.count()
+        # Every pin the writes read already ran its shuffle stages when
+        # it was created (PLANS.md "Round-plan pinning"); what is left of
+        # each is its result stage, whose partitions the block manager
+        # computes once however many concurrent jobs read them.  So the
+        # writes need no sequencing: robots_cache and auth_sessions read
+        # only the gate's pins (refreshed, gated) and start at once,
+        # overlapping the frontier dedupe below.
         pool = ThreadPoolExecutor(max_workers=8)
         try:
             f_rc = pool.submit(_robots_cache)
             f_sv = pool.submit(_sessions)
-            f_seen = pool.submit(seen_updates.count)
-            f_ex = pool.submit(extracted.count)
-            f_seen.result()
-            f_ex.result()
 
             # Dedupe before writing: extraction emits the same URL from
             # many parents (3-4x write amplification otherwise).  The
@@ -1182,12 +1168,13 @@ class CrawlEngine:
     ) -> DataFrame:
         """Lineage / metrics (A3/A4/A6) per host-shard.
 
-        Round totals (scheduled/fetched/blocked) are summed from this
-        per-partition lineage table after the persist fan-out instead of
-        running separate count() jobs over the same pinned data.  One
-        tagged union + ONE hash aggregate instead of four groupBys
-        stitched by three full-outer joins: the per-partition counters
-        all key on the same shard id, so a single shuffle suffices."""
+        These rows are the round's only counts: ``run_round`` sums its
+        totals (candidates, scheduled, fetched, robots-blocked) from the
+        pinned rows once their write has materialized them, so no stage
+        counts a pin of its own.  One tagged union + ONE hash aggregate
+        instead of four groupBys stitched by three full-outer joins: the
+        per-partition counters all key on the same shard id, so a single
+        shuffle suffices.  An empty round has no rows."""
         snapshot = json.dumps(self.store.manifest()["tables"], sort_keys=True)
         shard = lambda c: host_partition_key(c, self.cfg.num_partitions)
 
@@ -1224,17 +1211,6 @@ class CrawlEngine:
             )
         )
 
-    def _commit_empty(self, r: int) -> None:
-        empty_log = self.spark.createDataFrame([], S.CRAWL_LOG_SCHEMA)
-        self.store.append_round("crawl_log", empty_log, r)
-        self.store.append_round(
-            "lineage_metrics", self.spark.createDataFrame([], S.LINEAGE_METRICS_SCHEMA), r
-        )
-        fv = self.store.write_version(
-            "frontier", self.spark.createDataFrame([], CANDIDATES_SCHEMA)
-        )
-        self.store.commit(r, {"frontier": fv})
-
     def run(self, n_rounds: int) -> list[dict]:
         """Run up to n_rounds, resuming from the last committed round."""
         self.bootstrap()
@@ -1244,6 +1220,8 @@ class CrawlEngine:
             stats = self.run_round()
             stats["round_wall_ms"] = int((time.monotonic() - t0) * 1000)
             out.append(stats)
-            if stats.get("candidates", 0) == 0 and stats.get("new_candidates", 0) == 0:
+            # no candidates leave nothing to extract, so the next
+            # frontier is empty too
+            if stats["candidates"] == 0:
                 break
         return out

@@ -128,41 +128,6 @@ ROBOTS_SCHEMA = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# outputs
-# ---------------------------------------------------------------------------
-
-CRAWL_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("url", T.StringType(), False),
-        T.StructField("host", T.StringType(), True),
-        T.StructField("status", T.IntegerType(), True),
-        T.StructField("image_id", T.StringType(), True),
-        T.StructField("phash", T.LongType(), True),
-        T.StructField("caption", T.StringType(), True),
-        T.StructField("payload_ok", T.BooleanType(), True),
-        T.StructField("fetched_at", T.TimestampType(), True),
-        T.StructField("auth", T.StringType(), True),  # AuthNature marker
-    ]
-)
-
-# per-partition lineage+metrics rows (north_rule resumability; reference
-# analogue SlaveMetrics /root/reference/src/network/Reports.py:122-134)
-LINEAGE_METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("round", T.IntegerType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("urls_in", T.LongType(), True),
-        T.StructField("urls_deduped", T.LongType(), True),
-        T.StructField("urls_scheduled", T.LongType(), True),
-        T.StructField("urls_fetched", T.LongType(), True),
-        T.StructField("urls_robots_blocked", T.LongType(), True),
-        T.StructField("wall_ms", T.LongType(), True),
-        T.StructField("input_snapshot", T.StringType(), True),
-    ]
-)
-
 SEEDS_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

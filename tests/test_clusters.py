@@ -1,7 +1,7 @@
 """Near-dup connected-components clustering (operators/clusters.py):
-exact agreement with a pure-Python union-find on hand-built and random
-graphs, incl. a long chain (multi-iteration convergence) and isolated
-nodes."""
+the large-star/small-star contraction agrees exactly with a pure-Python
+union-find on hand-built and random graphs, incl. long chains (O(log n)
+rounds) and isolated nodes."""
 
 import os
 import sys
@@ -9,7 +9,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from artemis_spark.operators.clusters import (  # noqa: E402
-    connected_components,
     connected_components_star,
     dedup_clusters,
 )
@@ -36,12 +35,15 @@ def _union_find(n_ids, edges):
     return comp
 
 
-def _run(spark, ids, edges):
+def _run(spark, ids, edges, stats=None):
     nodes = spark.createDataFrame([(i,) for i in ids], "id: long")
     e = spark.createDataFrame(edges or [(None, None)], "src: long, dst: long").where(
         "src IS NOT NULL"
     )
-    got = {r["id"]: r["comp"] for r in connected_components(e, nodes).collect()}
+    got = {
+        r["id"]: r["comp"]
+        for r in connected_components_star(e, nodes, stats=stats).collect()
+    }
     assert got == _union_find(ids, edges)
 
 
@@ -50,7 +52,7 @@ def test_two_components_and_singleton(spark):
 
 
 def test_long_chain_converges(spark):
-    # diameter 9: needs several propagation rounds, not just one
+    # diameter 9: needs more than one contraction round
     _run(spark, list(range(10)), [(i, i + 1) for i in range(9)])
 
 
@@ -63,31 +65,13 @@ def test_random_graph_matches_union_find(spark):
     _run(spark, ids, edges)
 
 
-def _run_star(spark, ids, edges, stats=None):
-    nodes = spark.createDataFrame([(i,) for i in ids], "id: long")
-    e = spark.createDataFrame(edges or [(None, None)], "src: long, dst: long").where(
-        "src IS NOT NULL"
-    )
-    got = {
-        r["id"]: r["comp"]
-        for r in connected_components_star(e, nodes, stats=stats).collect()
-    }
-    assert got == _union_find(ids, edges)
-
-
-def test_star_agrees_on_fixtures(spark):
-    # same fixtures as min-label propagation (agreement requirement)
-    _run_star(spark, list(range(7)), [(1, 2), (2, 3), (5, 6)])
-    _run_star(spark, list(range(10)), [(i, i + 1) for i in range(9)])
-
-
 def test_star_random_graph(spark):
     import random
 
     rng = random.Random(7)
     ids = list(range(200))
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(120)]
-    _run_star(spark, ids, edges)
+    _run(spark, ids, edges)
 
 
 def test_star_chain_olog_rounds(spark):
@@ -97,7 +81,7 @@ def test_star_chain_olog_rounds(spark):
 
     n = 1000
     stats = {}
-    _run_star(spark, list(range(n)), [(i, i + 1) for i in range(n - 1)], stats)
+    _run(spark, list(range(n)), [(i, i + 1) for i in range(n - 1)], stats)
     assert stats["rounds"] <= 2 * int(math.log2(n)) + 2, stats
 
 

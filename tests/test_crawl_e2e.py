@@ -208,6 +208,38 @@ def test_torrent_magnets_queued(engine_run, model_run):
         assert row["nature"] == "web_static_torrent"
 
 
+def test_crawl_to_exhaustion_keeps_one_schema(spark, tmp_path, tiny_web):
+    """An empty round runs the same stages as any other: after a crawl
+    ends on its first empty round, crawl_log and lineage_metrics still
+    read as one table each, and the empty round reports the same keys.
+    The one seed links to a single leaf page, so round 2 is empty."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    seeds = str(tmp_path / "seeds.parquet")
+    pq.write_table(
+        pa.table({
+            "url": ["http://host0004.test/page8"],
+            "depth": pa.array([0], pa.int32()),
+            "nature": ["web_static"],
+        }),
+        seeds,
+    )
+    eng = CrawlEngine(
+        spark, tiny_web, str(tmp_path / "state"),
+        CrawlConfig(politeness_budget=BUDGET, num_partitions=4, bloom_shards=8),
+        seeds_path=seeds,
+    )
+    stats = eng.run(6)
+    assert [s["candidates"] for s in stats] == [1, 1, 0]
+    assert all(s.keys() == stats[-1].keys() for s in stats)
+    assert stats[-1]["new_candidates"] == 0
+    log = eng.store.read_appended("crawl_log").collect()
+    assert sorted((r["round"], r["status"]) for r in log) == [(0, 200), (1, 200)]
+    lineage = eng.store.read_appended("lineage_metrics").collect()
+    assert sorted(r["round"] for r in lineage) == [0, 1]
+
+
 def test_resume_after_interrupt_equals_straight_run(spark, tmp_path, tiny_web):
     """North-rule resumability: stop after round k, build a NEW engine on
     the same state dir, continue — final url_seen and crawl_log equal an

@@ -5,6 +5,8 @@ the pure-Python model exactly."""
 
 import pytest
 
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
 from artemis_spark.model import ModelConfig, ReferenceModel
 from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
 
@@ -27,16 +29,27 @@ def runs(spark, tiny_web, tmp_path_factory):
             light_stats=True,  # the recrawl shape perfbench measures
         ),
     )
-    eng_stats = eng.run(N_ROUNDS)
+    # every DataFrame.count call made while the rounds run, patched on
+    # the class so any caller is seen
+    counts = []
+    count = ClassicDataFrame.count
+
+    def recording_count(self):
+        counts.append(self)
+        return count(self)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClassicDataFrame, "count", recording_count)
+        eng_stats = eng.run(N_ROUNDS)
     model = ReferenceModel(
         tiny_web, ModelConfig(politeness_budget=BUDGET, revisit_delay_rounds=1)
     )
     model_result = model.run(N_ROUNDS)
-    return eng, eng_stats, model_result
+    return eng, eng_stats, model_result, counts
 
 
 def test_recrawl_fetch_sets_match(runs):
-    eng, _, result = runs
+    eng, _, result, _ = runs
     log = [r.asDict() for r in eng.store.read_appended("crawl_log").collect()]
     for r in range(N_ROUNDS):
         eng_urls = sorted(
@@ -49,7 +62,7 @@ def test_recrawl_fetch_sets_match(runs):
 
 
 def test_recrawl_happens(runs):
-    eng, _, result = runs
+    eng, _, result, _ = runs
     log = [r.asDict() for r in eng.store.read_appended("crawl_log").collect()]
     from collections import Counter
 
@@ -58,9 +71,9 @@ def test_recrawl_happens(runs):
 
 
 def test_light_stats_counts_candidates_only(runs):
-    """light_stats skips only the info-only frontier-size count: every
-    round still counts its candidates."""
-    _, stats, _ = runs
+    """light_stats leaves out only the info-only frontier size: every
+    round still reports its candidates, summed from its lineage rows."""
+    _, stats, _, _ = runs
     assert len(stats) == N_ROUNDS
     for s in stats:
         assert type(s["candidates"]) is int and s["candidates"] > 0, s
@@ -68,7 +81,7 @@ def test_light_stats_counts_candidates_only(runs):
 
 
 def test_backoff_state_matches(runs):
-    eng, _, result = runs
+    eng, _, result, _ = runs
     seen = {
         r["url"]: (r["refresh_rate"], r["last_hash"])
         for r in eng.store.read("url_seen").collect()
@@ -79,3 +92,11 @@ def test_backoff_state_matches(runs):
     }
     assert seen == mod
     assert any(rr > 1 for rr, _ in seen.values()), "backoff never incremented"
+
+
+def test_light_stats_rounds_run_no_count(runs):
+    """With light_stats a round counts nothing: its totals are the sums
+    of the lineage rows its write already materialized."""
+    _, stats, _, counts = runs
+    assert len(stats) == N_ROUNDS
+    assert counts == []

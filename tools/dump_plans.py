@@ -138,13 +138,18 @@ join, window — up to 4x per round.  Measured at local[1], tier=bench,
 round's 'seen_updates materialize' phase (which used to pay 3 of the
 4 re-runs) 9-53s → 3.7-22s.
 
-Write-tail shape after r5: robots_cache and auth_sessions persists are
-submitted as soon as their inputs (refreshed / gated) are materialized
-and overlap the extraction materialize; a round that refreshed no
-robots rules or deferred no auth URL skips those writes entirely
-(committed version re-recorded); url_seen/host_stats/robots deltas
-append UNPARTITIONED small files (bucket kept as a column; partition
-dirs only on compacted bases, where PartitionFilter pruning pays)."""
+Write-tail shape: the persists run as concurrent jobs with no
+sequencing action before them.  Every pin they read ran its shuffle
+stages when it was created (see Round-plan pinning); what is left is
+its result stage, whose partitions the block manager computes once
+however many jobs read them concurrently.  robots_cache and
+auth_sessions start first and overlap the frontier dedupe; a round
+that refreshed no robots rules or deferred no auth URL skips those
+writes entirely (committed version re-recorded); url_seen/host_stats/
+robots deltas append UNPARTITIONED small files (bucket kept as a
+column; partition dirs only on compacted bases, where PartitionFilter
+pruning pays).  The round counts nothing itself: its totals are the
+sums of the pinned lineage rows, one collect after their write."""
 
 
 def main() -> None:
@@ -334,7 +339,7 @@ def main() -> None:
     sections.append((
         "Round-plan pinning — the driver, not the executors, is the "
         "scale axis that breaks first on a long-lived crawl; each "
-        "round's ~55-70 jobs MUST see O(1)-size plans, not the round's "
+        "round's ~50 jobs MUST see O(1)-size plans, not the round's "
         "full operator tree.",
         PIN_NOTE,
     ))
