@@ -26,6 +26,7 @@ import os
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import reduce
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -193,10 +194,11 @@ class _Round:
         return p
 
     def release(self) -> None:
-        """Unpersist every pin: every plan referencing them has
-        materialized (or the round failed)."""
+        """Free every pin's checkpoint RDD: every plan referencing them
+        has materialized (or the round failed).  ``DataFrame.unpersist()``
+        does not free a localCheckpoint's blocks."""
         while self.pins:
-            self.pins.pop().unpersist()
+            self.pins.pop()._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -419,18 +421,15 @@ class CrawlEngine:
             crawl_log = self._crawl_log(rd, fetched, gate, torrents)
             extracted, next_frontier = self._links(rd, fetched, gate, scheduled, deferred)
             seen_updates = self._seen_updates(rd, fetched, gate, torrents)
-            wall_ms, lineage, next_frontier = self._persist(
+            wall_ms, lineage_rows = self._persist(
                 rd, candidates, gate, scheduled, fetched, crawl_log, extracted,
                 next_frontier, seen_updates,
             )
-            # <= num_partitions rows, already materialized by their write
-            lineage_rows = lineage.collect()
-            n_next = None if self.cfg.light_stats else next_frontier.count()
         finally:
             rd.release()
         total = lambda c: sum(row[c] for row in lineage_rows)
-        # return contract: when the frontier-size count above is skipped,
-        # the info-only "new_candidates" is None (not 0, not a sentinel
+        # return contract: with light_stats the info-only "new_candidates"
+        # (the committed frontier's size) is None (not 0, not a sentinel
         # int) — consumers aggregating per-round counts must skip None.
         return {
             "round": rd.r,
@@ -438,7 +437,9 @@ class CrawlEngine:
             "scheduled": total("urls_scheduled"),
             "robots_blocked": total("urls_robots_blocked"),
             "fetched": total("urls_fetched"),
-            "new_candidates": n_next,
+            "new_candidates": (
+                None if self.cfg.light_stats else self.store.committed_rows("frontier")
+            ),
             "wall_ms": wall_ms,
         }
 
@@ -626,12 +627,17 @@ class CrawlEngine:
         need = cand_hosts.join(
             F.broadcast(live_slice.select("host").distinct()), "host", "left_anti"
         )
-        # explicit casts: an all-NULL column in a user-supplied robots
-        # parquet arrives VOID-typed and corrupts downstream unions
-        src_rules = (
-            self.robots.drop("fetched_at")
-            .join(F.broadcast(need), "host", "left_semi")
-            .select(
+        # One LEFT join from the needy hosts to their source rules (the
+        # source streams past the broadcast host set; only the wave's
+        # rules are broadcast back): a host with no rules keeps one
+        # all-NULL row, its sentinel.  Explicit casts: an all-NULL column
+        # in a user-supplied robots parquet arrives VOID-typed and
+        # corrupts downstream unions.
+        src_rules = self.robots.drop("fetched_at").join(
+            F.broadcast(need), "host", "left_semi"
+        )
+        refreshed = rd.pin(
+            need.join(F.broadcast(src_rules), "host", "left").select(
                 "host",
                 F.col("pattern").cast("string").alias("pattern"),
                 F.col("allow").cast("boolean").alias("allow"),
@@ -640,18 +646,6 @@ class CrawlEngine:
                 F.coalesce(F.col("ttl_s").cast("int"), F.lit(3600)).alias("ttl_s"),
             )
         )
-        src_rules = rd.pin(src_rules)
-        no_rules = need.join(
-            F.broadcast(src_rules.select("host").distinct()), "host", "left_anti"
-        ).select(
-            "host",
-            F.lit(None).cast("string").alias("pattern"),
-            F.lit(None).cast("boolean").alias("allow"),
-            F.lit(None).cast("string").alias("sitemap_url"),
-            F.lit(now).alias("fetched_at"),
-            F.lit(3600).alias("ttl_s"),
-        )
-        refreshed = rd.pin(src_rules.unionByName(no_rules))
         wave_rules = rd.pin(live_slice.unionByName(refreshed))
         return cand_hosts, wave_buckets, refreshed, wave_rules
 
@@ -1034,10 +1028,9 @@ class CrawlEngine:
         extracted: DataFrame,
         next_frontier: DataFrame,
         seen_updates: DataFrame,
-    ) -> tuple[int, DataFrame, DataFrame]:
+    ) -> tuple[int, list]:
         """Write every table of the round, an empty one's too, and
-        commit the manifest; returns (wall_ms, lineage pin, next_frontier
-        pin), both pins materialized by their writes."""
+        commit the manifest; returns (wall_ms, lineage rows)."""
         store, r = self.store, rd.r
         # host PageRank proxy: inbound links observed this round.  In the
         # delta-log layout (A3 at scale) these per-host increments are the
@@ -1046,11 +1039,22 @@ class CrawlEngine:
         inlink_delta = extracted.groupBy("host").agg(
             F.count("*").cast("long").alias("inlinks")
         )
+        # The <= num_partitions lineage rows, collected once before the
+        # writes: they carry the round's totals and decide the two
+        # skippable writes, and the lineage_metrics write re-ships them.
+        lineage = self._lineage(rd, candidates, scheduled, fetched, gate)
+        lineage_rows = lineage.collect()
+        wall_ms = int((time.monotonic() - rd.t_start) * 1000)
+        lineage = self.spark.createDataFrame(
+            [(*row, wall_ms) for row in lineage_rows],
+            lineage.schema.add("wall_ms", T.IntegerType(), False),
+        ).coalesce(1)
+        total = lambda c: sum(row[c] for row in lineage_rows)
 
         def _robots_cache():
             # nothing re-fetched this round: the committed version is
             # already current — no write job at all
-            if rd.robots_cache.chain() and gate.refreshed.isEmpty():
+            if rd.robots_cache.chain() and not total("robots_rows_refreshed"):
                 return rd.robots_cache.current()
             return rd.robots_cache.write(gate.refreshed)
 
@@ -1058,46 +1062,34 @@ class CrawlEngine:
             # tiny per-host table (only auth-gated hosts ever get rows);
             # when no URL deferred this round no new session can exist —
             # reuse the committed version, skip the job entirely
-            if gate.auth_deferred.isEmpty():
+            if not total("urls_auth_deferred"):
                 return store.current_version("auth_sessions")
             return store.write_version("auth_sessions", gate.sessions_next)
 
-        # Every pin the writes read already ran its shuffle stages when
-        # it was created (PLANS.md "Round-plan pinning"); what is left of
-        # each is its result stage, whose partitions the block manager
-        # computes once however many concurrent jobs read them.  So the
-        # writes need no sequencing: robots_cache and auth_sessions read
-        # only the gate's pins (refreshed, gated) and start at once,
-        # overlapping the frontier dedupe below.
+        # Dedupe before writing: extraction emits the same URL from many
+        # parents (3-4x write amplification otherwise).  The dedupe keys
+        # on the uniform (url, host) hash — safe under the zipf-heavy
+        # target-host skew of the raw extracted stream — and the written
+        # frontier stays in that uniform layout: the next round starts
+        # with its own routing repartition by host, so a host-grouping
+        # shuffle here would move the round's largest intermediate a
+        # second time for a layout nothing consumes.  Only the frontier
+        # write reads it, so it runs inside that write, unpinned.
+        # Recrawl rows are NOT written here — they are derived from
+        # url_seen at the next round's read (merge-on-read recrawl, see
+        # _read_state).
+        next_frontier = dedupe_within_batch(
+            next_frontier.select(*CANDIDATE_COLS)
+        ).select(*CANDIDATE_COLS)
+
+        # The persists share only pinned parents, whose shuffle stages
+        # ran when they were created (PLANS.md "Round-plan pinning"), so
+        # they run unsequenced as concurrent Spark jobs from driver
+        # threads.  Nothing is visible until the manifest commit.
         pool = ThreadPoolExecutor(max_workers=8)
         try:
             f_rc = pool.submit(_robots_cache)
             f_sv = pool.submit(_sessions)
-
-            # Dedupe before writing: extraction emits the same URL from
-            # many parents (3-4x write amplification otherwise).  The
-            # dedupe keys on the uniform (url, host) hash — safe under the
-            # zipf-heavy target-host skew of the raw extracted stream —
-            # and the written frontier stays in that uniform layout: the
-            # next round starts with its own routing repartition by host,
-            # so a host-grouping shuffle here would move the round's
-            # largest intermediate a second time for a layout nothing
-            # consumes.  Recrawl rows are NOT written here — they are
-            # derived from url_seen at the next round's read
-            # (merge-on-read recrawl, see _read_state).
-            next_frontier = rd.pin(
-                dedupe_within_batch(next_frontier.select(*CANDIDATE_COLS))
-                .select(*CANDIDATE_COLS)
-            )
-            wall_ms = int((time.monotonic() - rd.t_start) * 1000)
-            lineage = rd.pin(self._lineage(
-                rd, wall_ms, candidates, scheduled, fetched, gate.robots_blocked
-            ))
-
-            # The persists are data-independent (they share only pinned
-            # parents), so they run as concurrent Spark jobs from driver
-            # threads — the per-job driver overhead overlaps instead of
-            # serializing.  Nothing is visible until the manifest commit.
             f_log = pool.submit(store.append_round, "crawl_log", crawl_log, r)
             f_lin = pool.submit(store.append_round, "lineage_metrics", lineage, r)
             f_uv = pool.submit(rd.url_seen.write, seen_updates)
@@ -1130,7 +1122,7 @@ class CrawlEngine:
         # keep one prior snapshot for post-hoc inspection (Iceberg's
         # expire_snapshots analogue)
         store.vacuum(keep_last=2)
-        return wall_ms, lineage, next_frontier
+        return wall_ms, lineage_rows
 
     def _write_bloom(self, seen_updates: DataFrame) -> int:
         """Incremental bloom update with this round's seen URLs: OR-merge
@@ -1160,53 +1152,46 @@ class CrawlEngine:
     def _lineage(
         self,
         rd: _Round,
-        wall_ms: int,
         candidates: DataFrame,
         scheduled: DataFrame,
         fetched: DataFrame,
-        robots_blocked: DataFrame,
+        gate: _Gate,
     ) -> DataFrame:
-        """Lineage / metrics (A3/A4/A6) per host-shard.
+        """Lineage / metrics (A3/A4/A6) per host-shard, without the
+        ``wall_ms`` column the caller appends once it has collected them.
 
         These rows are the round's only counts: ``run_round`` sums its
-        totals (candidates, scheduled, fetched, robots-blocked) from the
-        pinned rows once their write has materialized them, so no stage
-        counts a pin of its own.  One tagged union + ONE hash aggregate
-        instead of four groupBys stitched by three full-outer joins: the
-        per-partition counters all key on the same shard id, so a single
-        shuffle suffices.  An empty round has no rows."""
+        totals (candidates, scheduled, fetched, robots-blocked) from
+        them, and ``_persist`` decides from the auth-deferred and
+        refreshed-robots tallies whether auth_sessions and robots_cache
+        are rewritten, so no stage counts or probes a pin of its own.
+        One tagged union + ONE hash aggregate instead of a groupBy per
+        counter stitched by full-outer joins: the per-partition counters
+        all key on the same shard id, so a single shuffle suffices.  An
+        empty round has no rows."""
         snapshot = json.dumps(self.store.manifest()["tables"], sort_keys=True)
-        shard = lambda c: host_partition_key(c, self.cfg.num_partitions)
-
-        def _tagged(df, tag):
-            return df.select(
-                shard(F.col("host")).alias("partition_id"), F.lit(tag).alias("_k")
-            )
-
-        tally = lambda tag: F.sum(
-            F.when(F.col("_k") == tag, 1).otherwise(0)
-        )
+        shard = host_partition_key(F.col("host"), self.cfg.num_partitions)
+        counted = {
+            "urls_in": candidates,
+            "urls_scheduled": scheduled,
+            "urls_fetched": fetched,
+            "urls_robots_blocked": gate.robots_blocked,
+            "urls_auth_deferred": gate.auth_deferred,
+            "robots_rows_refreshed": gate.refreshed,
+        }
+        tagged = reduce(lambda a, b: a.unionByName(b), (
+            df.select(shard.alias("partition_id"), F.lit(c).alias("_k"))
+            for c, df in counted.items()
+        ))
         return (
-            _tagged(candidates, "in")
-            .unionByName(_tagged(scheduled, "sched"))
-            .unionByName(_tagged(fetched, "fetch"))
-            .unionByName(_tagged(robots_blocked, "blocked"))
-            .groupBy("partition_id")
-            .agg(
-                tally("in").alias("urls_in"),
-                tally("sched").alias("urls_scheduled"),
-                tally("fetch").alias("urls_fetched"),
-                tally("blocked").alias("urls_robots_blocked"),
-            )
+            tagged.groupBy("partition_id")
+            .agg(*(F.sum(F.when(F.col("_k") == c, 1).otherwise(0)).alias(c) for c in counted))
             .select(
                 F.lit(rd.r).alias("round"),
                 F.col("partition_id").cast("int"),
-                F.col("urls_in"),
+                "urls_in",
                 (F.col("urls_in") - F.col("urls_scheduled")).alias("urls_deduped"),
-                F.col("urls_scheduled"),
-                F.col("urls_fetched"),
-                F.col("urls_robots_blocked"),
-                F.lit(wall_ms).alias("wall_ms"),
+                *list(counted)[1:],
                 F.lit(snapshot).alias("input_snapshot"),
             )
         )

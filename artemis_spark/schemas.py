@@ -127,11 +127,3 @@ ROBOTS_SCHEMA = T.StructType(
         T.StructField("ttl_s", T.IntegerType(), True),  # 3600 (src/Robot.py:107)
     ]
 )
-
-SEEDS_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("depth", T.IntegerType(), True),
-        T.StructField("nature", T.StringType(), True),
-    ]
-)

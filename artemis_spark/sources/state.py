@@ -40,6 +40,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,6 +126,16 @@ class StateStore:
     def _has_files(self, path: str) -> bool:
         return any(
             f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
+        )
+
+    def committed_rows(self, table: str) -> int:
+        """Row count of a plain table's committed version, summed from
+        its parquet footers on the driver: no Spark job reads the rows."""
+        return sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for d, _, fs in os.walk(self._vdir(table, self.current_version(table)))
+            for f in fs
+            if f.endswith(".parquet")
         )
 
     def _live(self, table: str, chain: list[int]) -> list[int]:

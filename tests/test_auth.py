@@ -92,6 +92,24 @@ def test_auth_session_lifecycle(spark, tmp_path, tiny_web):
     # ... and round d+3 fetches again under the re-login
     assert any(r["status"] == 200 for r in by_round.get(d + 3, []))
 
+    # each round's lineage tallies exactly its deferred (998) rows: the
+    # tally that decides whether auth_sessions is rewritten
+    lineage = eng.store.read_appended("lineage_metrics")
+    tallied = {
+        r["round"]: r["n"]
+        for r in lineage.groupBy("round")
+        .agg(F.sum("urls_auth_deferred").alias("n"))
+        .collect()
+    }
+    logged = {
+        r["round"]: r["count"]
+        for r in log.filter(F.col("status") == AUTH_DEFERRED_STATUS)
+        .groupBy("round")
+        .count()
+        .collect()
+    }
+    assert tallied == {r: logged.get(r, 0) for r in range(6)}
+
     # plain hosts still carry auth='no' on fetched rows
     normal = (
         log.filter((F.col("status") == 200) & (F.col("host") == "host0000.test"))

@@ -7,7 +7,7 @@ same seed list + politeness budget")."""
 import pytest
 
 from artemis_spark.model import ModelConfig, ReferenceModel
-from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
+from artemis_spark.plans.crawl import CANDIDATES_SCHEMA, CrawlConfig, CrawlEngine
 
 N_ROUNDS = 4
 BUDGET = 5
@@ -15,15 +15,17 @@ BUDGET = 5
 
 @pytest.fixture(scope="module")
 def engine_run(spark, tiny_web, tmp_path_factory):
-    """(engine, per-round stats, bloom traffic) of one N_ROUNDS crawl.
+    """(engine, per-round stats, round traffic) of one N_ROUNDS crawl.
 
-    The bloom traffic records, over the whole run, every load of a full
-    bloom version into the driver (``BloomShards.load_dir``) and every
+    The traffic records, over the whole run, every load of a full bloom
+    version into the driver (``BloomShards.load_dir``) and every
     broadcast of a bitset (a ``SparkContext.broadcast`` value carrying
     ``"bits"``) — both patched on their classes, so any caller is seen —
     and, per round, the ``MapInPandas`` nodes in the physical plans of
     all the round's pins (``_Round.pin``; the bloom probe is the round's
-    only ``mapInPandas``)."""
+    only ``mapInPandas``), the persistent RDDs created since the crawl
+    began that are still registered when the round returns, and the row
+    count of the frontier it committed."""
     from pyspark import SparkContext
 
     from artemis_spark.operators.bloom import BloomShards
@@ -36,8 +38,14 @@ def engine_run(spark, tiny_web, tmp_path_factory):
         state,
         CrawlConfig(politeness_budget=BUDGET, num_partitions=4, bloom_shards=8),
     )
-    traffic = {"load_dir": [], "bitset_broadcast": 0, "map_in_pandas": {}}
+    traffic = {
+        "load_dir": [], "bitset_broadcast": 0, "map_in_pandas": {},
+        "persistent_rdds": [], "frontier_rows": [],
+    }
     load_dir, broadcast, pin = BloomShards.load_dir, SparkContext.broadcast, _Round.pin
+    run_round = CrawlEngine.run_round
+    sc = spark.sparkContext
+    first_rdd = sc.parallelize([]).id()  # RDD ids grow: later ones are this crawl's
 
     def recording_load_dir(cls, path):
         traffic["load_dir"].append(path)
@@ -54,10 +62,20 @@ def engine_run(spark, tiny_web, tmp_path_factory):
         nodes[self.r] = nodes.get(self.r, 0) + plan.count("MapInPandas")
         return pin(self, df)
 
+    def recording_run_round(self):
+        stats = run_round(self)
+        persistent = sc._jsc.getPersistentRDDs().keySet()
+        traffic["persistent_rdds"].append(sum(1 for i in persistent if i > first_rdd))
+        traffic["frontier_rows"].append(
+            self.store.read("frontier", CANDIDATES_SCHEMA).count()
+        )
+        return stats
+
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(BloomShards, "load_dir", classmethod(recording_load_dir))
         mp.setattr(SparkContext, "broadcast", recording_broadcast)
         mp.setattr(_Round, "pin", recording_pin)
+        mp.setattr(CrawlEngine, "run_round", recording_run_round)
         stats = eng.run(N_ROUNDS)
     return eng, stats, traffic
 
@@ -97,6 +115,22 @@ def test_bloom_probe_runs_once_per_round(engine_run):
     assert traffic["map_in_pandas"] == {
         s["round"]: (0 if s["round"] == 0 else 1) for s in stats
     }
+
+
+def test_rounds_free_their_pins(engine_run):
+    """A round frees the checkpoint blocks of every pin it made: from
+    round 1 on (the engine's own caches are built by then) the same
+    number of persistent RDDs is left after every round."""
+    _, stats, traffic = engine_run
+    assert len(traffic["persistent_rdds"]) == len(stats) == N_ROUNDS
+    assert len(set(traffic["persistent_rdds"][1:])) == 1, traffic["persistent_rdds"]
+
+
+def test_new_candidates_is_committed_frontier_size(engine_run):
+    """Without light_stats a round reports the row count of the
+    frontier version it committed."""
+    _, stats, traffic = engine_run
+    assert [s["new_candidates"] for s in stats] == traffic["frontier_rows"]
 
 
 def test_web_without_page_bodies_is_refused(spark, tiny_web, tmp_path):
@@ -377,28 +411,24 @@ def test_persist_failure_waits_for_writers_and_resumes(
 def test_salted_fetch_wave_same_results(spark, tmp_path, tiny_web):
     """north_rule skew handling: running the round with fetch_salt > 0
     (salted host repartition of the wave) must not change any output —
-    salting is a physical re-distribution only."""
-    from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
+    salting is a physical re-distribution only: after 3 rounds the
+    whole crawl_log and url_seen digest the same as an unsalted run's."""
+    import hashlib
 
-    base = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "nosalt"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8),
-    )
-    base.run(2)
-    salted = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "salt"),
-        CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8, fetch_salt=3),
-    )
-    salted.run(2)
+    def crawl(salt):
+        eng = CrawlEngine(
+            spark, tiny_web, str(tmp_path / f"salt{salt}"),
+            CrawlConfig(politeness_budget=5, num_partitions=4, bloom_shards=8,
+                        fetch_salt=salt),
+        )
+        eng.run(3)
+        return eng
 
-    def log(eng):
-        return {
-            (r["round"], r["url"], r["status"], r["image_id"], r["phash"])
-            for r in eng.store.read_appended("crawl_log").collect()
-        }
+    def digest(df):
+        rows = sorted(repr(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+        return hashlib.sha256("\n".join(rows).encode()).hexdigest()
 
-    assert log(salted) == log(base)
-    seen = lambda e: {
-        (r["url"], r["refresh_rate"]) for r in e.store.read("url_seen").collect()
-    }
-    assert seen(salted) == seen(base)
+    base, salted = crawl(0), crawl(4)
+    for read in (lambda e: e.store.read_appended("crawl_log"),
+                 lambda e: e.store.read("url_seen")):
+        assert digest(read(salted)) == digest(read(base))

@@ -29,17 +29,20 @@ def runs(spark, tiny_web, tmp_path_factory):
             light_stats=True,  # the recrawl shape perfbench measures
         ),
     )
-    # every DataFrame.count call made while the rounds run, patched on
-    # the class so any caller is seen
+    # every DataFrame.count / isEmpty call made while the rounds run,
+    # patched on the class so any caller is seen
     counts = []
-    count = ClassicDataFrame.count
 
-    def recording_count(self):
-        counts.append(self)
-        return count(self)
+    def recording(method):
+        def record(self):
+            counts.append((method.__name__, self))
+            return method(self)
+
+        return record
 
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(ClassicDataFrame, "count", recording_count)
+        for method in (ClassicDataFrame.count, ClassicDataFrame.isEmpty):
+            mp.setattr(ClassicDataFrame, method.__name__, recording(method))
         eng_stats = eng.run(N_ROUNDS)
     model = ReferenceModel(
         tiny_web, ModelConfig(politeness_budget=BUDGET, revisit_delay_rounds=1)
@@ -95,8 +98,9 @@ def test_backoff_state_matches(runs):
 
 
 def test_light_stats_rounds_run_no_count(runs):
-    """With light_stats a round counts nothing: its totals are the sums
-    of the lineage rows its write already materialized."""
+    """With light_stats a round counts and probes nothing: its totals
+    and its write-skip decisions come from the lineage rows it collects
+    once."""
     _, stats, _, counts = runs
     assert len(stats) == N_ROUNDS
     assert counts == []

@@ -79,3 +79,43 @@ def test_robots_rule_expires_on_the_correct_round(spark, tmp_path):
     row = cache.filter(cache["host"] == "host0000.test").collect()
     assert len(row) == 1 and row[0]["allow"] is True
     assert row[0]["fetched_at"].hour == 3  # re-fetched at round 3, not before
+
+
+def test_rule_less_host_is_negatively_cached(spark, tmp_path):
+    """A host the robots source has no rules for is cached as one
+    NULL-pattern sentinel row stamped with the fetch round (ttl 3600 =
+    one logical round), and that row is served, not re-fetched, while
+    it is live: round 1 leaves it unchanged."""
+    from artemis_spark.rounds import round_ts
+
+    web = str(tmp_path / "web")
+    generate("tiny", web)
+    _write_robots(web, allow=False)  # rules for host0000 only
+
+    eng = CrawlEngine(
+        spark, web, str(tmp_path / "state"),
+        CrawlConfig(politeness_budget=8, num_partitions=4, bloom_shards=8),
+    )
+    eng.run(1)
+    hosts = {
+        r["host"] for r in eng.store.read_appended("crawl_log").collect()
+    } - {"host0000.test"}
+    assert hosts, "round 0 reached no rule-less host"
+
+    def rows():
+        cache = eng.store.read("robots_cache").drop("bucket")
+        return {
+            h: [r.asDict() for r in cache.filter(cache["host"] == h).collect()]
+            for h in hosts
+        }
+
+    after_round0 = rows()
+    for host, cached in after_round0.items():
+        assert len(cached) == 1, (host, cached)
+        (row,) = cached
+        assert row["pattern"] is None and row["allow"] is None, row
+        assert row["ttl_s"] == 3600
+        # collected timestamps are naive local time; compare instants
+        assert row["fetched_at"].timestamp() == round_ts(0).timestamp()
+    eng.run(1)
+    assert rows() == after_round0

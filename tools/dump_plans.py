@@ -138,18 +138,24 @@ join, window — up to 4x per round.  Measured at local[1], tier=bench,
 round's 'seen_updates materialize' phase (which used to pay 3 of the
 4 re-runs) 9-53s → 3.7-22s.
 
-Write-tail shape: the persists run as concurrent jobs with no
-sequencing action before them.  Every pin they read ran its shuffle
-stages when it was created (see Round-plan pinning); what is left is
-its result stage, whose partitions the block manager computes once
-however many jobs read them concurrently.  robots_cache and
-auth_sessions start first and overlap the frontier dedupe; a round
-that refreshed no robots rules or deferred no auth URL skips those
-writes entirely (committed version re-recorded); url_seen/host_stats/
-robots deltas append UNPARTITIONED small files (bucket kept as a
-column; partition dirs only on compacted bases, where PartitionFilter
-pruning pays).  The round counts nothing itself: its totals are the
-sums of the pinned lineage rows, one collect after their write."""
+Write-tail shape: the round first collects its <= P lineage rows (one
+tagged-union aggregate over the candidates, gated, ranked, fetched and
+refreshed pins); they carry the round's totals and the two write-skip
+tallies, so no stage counts or probes a pin.  The persists then run as
+concurrent jobs with no sequencing action before them.  Every pin they
+read ran its shuffle stages when it was created (see Round-plan
+pinning); what is left is its result stage, whose partitions the block
+manager computes once however many jobs read them concurrently.  A
+round whose lineage tallies no refreshed robots rule or no
+auth-deferred URL skips that write entirely (committed version
+re-recorded); lineage_metrics is written from the collected rows; the
+next frontier is not pinned — only its write reads it, so its dedupe
+runs inside that write; url_seen/host_stats/robots deltas append
+UNPARTITIONED small files (bucket kept as a column; partition dirs only
+on compacted bases, where PartitionFilter pruning pays).  Every pin
+left is read by two or more plans, and the round unpersists each pin's
+checkpoint RDD when it ends (`DataFrame.unpersist()` does not free a
+localCheckpoint), so no round's blocks outlive it."""
 
 
 def main() -> None:
